@@ -1,19 +1,87 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
 
-/** Gate-query hygiene helpers. */
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, GraftStorageBridge}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.storage.StorageLevel
+
+/** The one owner of materialized intermediates. A [[GateUtil.Scope]]
+  * records the exact RDD each `checkpoint` creates (read off the new
+  * leaf, never a registry diff) and each frame it `persist`s or is
+  * handed to `own`; `free` drops one now, exit frees the rest. A
+  * checkpoint leaf's size estimate is its stored bytes, not the estimate
+  * copied from its source plan — for a join the product of its inputs',
+  * which compounds round after round. A gate runs in [[pinned]] (its
+  * bounded report is collected before the scope frees); a library core
+  * its caller reads lazily takes the caller's `implicit s: Scope`; a
+  * call whose result is as large as its data (e.g.
+  * [[graft.operators.Components.connected]]) runs its own [[scoped]]
+  * block and returns a cached frame the caller unpersists. */
 object GateUtil {
-  /** Materialize a (small) result, run `free` (unpersist working
-    * caches), and return the rows as a local-relation DataFrame — so no
-    * cache outlives its query to GC-thrash whichever query runs next in
-    * Verify/Bench (each leaked cache is invisible to per-query timing
-    * but taxes the rest of the session). */
-  def pinned(out: DataFrame)(free: => Unit): DataFrame = {
-    val rows = out.collect()
-    val schema = out.schema
-    free
-    out.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), schema)
+
+  final class Scope private[GateUtil] () {
+    private val rdds = mutable.LinkedHashMap.empty[Int, RDD[_]]
+    private val frames = mutable.ArrayBuffer.empty[Dataset[_]]
+
+    def checkpoint(df: DataFrame): DataFrame = {
+      val leaf = df.localCheckpoint(true)
+      val rdd = own(GraftStorageBridge.leafRdds(leaf).head)
+      GraftStorageBridge.withSize(leaf, math.max(1L, GraftStorageBridge.storedBytes(rdd)))
+    }
+
+    def persist[T](ds: Dataset[T],
+        level: StorageLevel = StorageLevel.MEMORY_AND_DISK): Dataset[T] =
+      own(ds.persist(level))
+
+    def own[T](ds: Dataset[T]): Dataset[T] = { frames += ds; ds }
+
+    def own[T](rdd: RDD[T]): RDD[T] = { rdds(rdd.id) = rdd; rdd }
+
+    def free(ds: Dataset[_]): Unit = {
+      GraftStorageBridge.leafRdds(ds).foreach(r => rdds.remove(r.id).foreach(_.unpersist(false)))
+      frames.filterInPlace(f => !(f eq ds) || { f.unpersist(false); false })
+    }
+
+    private[GateUtil] def close(): Unit = {
+      rdds.values.foreach(_.unpersist(false))
+      frames.foreach(_.unpersist(false))
+    }
   }
+
+  /** `df.checkpointed` / `ds.persisted`: the implicit scope's
+    * checkpoint / persist in method-chain position. */
+  implicit final class ScopedOps[T](private val ds: Dataset[T]) extends AnyVal {
+    def checkpointed(implicit s: Scope): DataFrame = s.checkpoint(ds.toDF())
+    def persisted(implicit s: Scope): Dataset[T] = s.persist(ds)
+  }
+
+  /** Runs `body` in a fresh scope, freed when `body` returns or throws. */
+  def scoped[T](body: Scope => T): T = {
+    val s = new Scope
+    try body(s) finally s.close()
+  }
+
+  // pinned report -> the frame it was collected from (weak keys)
+  private val sources = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[DataFrame, DataFrame]())
+
+  /** A gate entry point: collects `body`'s report (bounded by
+    * construction — every gate emits a census, top-k or grain-bounded
+    * result) and returns it as a local relation once the scope has freed
+    * everything, so no block outlives its query to tax the next one. */
+  def pinned(body: Scope => DataFrame): DataFrame = scoped { s =>
+    val out = body(s)
+    val rows = out.collect()
+    val pin = out.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    sources.put(pin, out)
+    pin
+  }
+
+  /** The plan a gate's result stands for, for plan-hygiene sweeps: a
+    * pinned report's source plan (planned afresh), else `df`'s own. */
+  def planOf(df: DataFrame): SparkPlan =
+    Option(sources.get(df)).map(GraftStorageBridge.freshPlan)
+      .getOrElse(df.queryExecution.executedPlan)
 }

@@ -24,9 +24,10 @@ object Decompositions {
 
   /** Per-partition R factors tree-merged: R of the stacked [R1; R2] QR. */
   private def tsqrR(rows: RDD[Array[Double]], p: Int): BDM[Double] = {
-    LapackInit.forced // DLAMCH race guard — the per-partition QRs below
-    // may be this JVM's first (concurrent) LAPACK calls
+    // DLAMCH race guard inside each closure that calls LAPACK: a task
+    // may make its executor JVM's first (concurrent) LAPACK call
     val partR = rows.mapPartitions { it =>
+      LapackInit.forced
       val data = it.toArray
       if (data.isEmpty) Iterator.empty
       else {
@@ -35,6 +36,7 @@ object Decompositions {
       }
     }
     partR.treeReduce({ (r1, r2) =>
+      LapackInit.forced
       bqr.reduced(BDM.vertcat(r1, r2)).r
     }, depth = 3)
   }

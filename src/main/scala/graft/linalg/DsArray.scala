@@ -40,6 +40,15 @@ final class DsArray(val bm: BlockMatrix, val sparseTiles: Boolean = false) {
 
   def transpose: DsArray = new DsArray(bm.transpose, sparseTiles)
 
+  /** The block-shape RDD MLlib's BlockMatrix caches the first time it
+    * validates or multiplies and never frees — read off its private
+    * field so the caller's GateUtil scope can own it. */
+  private[graft] def shapeCache: Option[RDD[_]] = {
+    val f = classOf[BlockMatrix].getDeclaredField("blockInfo")
+    f.setAccessible(true)
+    Option(f.get(bm).asInstanceOf[RDD[_]])
+  }
+
   /** Per-block elementwise map (reference: array.py:206-407 scalar ops /
     * _apply_elementwise). Runs as one narrow stage — no shuffle.
     *

@@ -38,12 +38,21 @@ object LinalgQueries {
     * must be a pure layout change, pinned against the identical oracle.
     * (Block-sum order changes with the tiling; the shared round-6 output
     * already dominates that fp noise, same as the base gate.) */
+  /** AᵀA. MLlib's multiply caches a block-shape RDD per operand that it
+    * never frees; the scope frees both. */
+  private def gram(a: DsArray) = graft.GateUtil.scoped { s =>
+    val at = a.transpose
+    val g = (at %*% a).collect()
+    Seq(at, a).flatMap(_.shapeCache).foreach(s.own(_))
+    g
+  }
+
   def rechunkGram(spark: SparkSession, dir: String): DataFrame = {
     val rows = embRows(spark, dir).map { case (i, v) =>
       IndexedRow(i, Vectors.dense(v)) }
     val n = rows.count()
     val a = DsArray.fromIndexedRows(rows, n, P, 64, 4).rechunk(17, 3)
-    val g = (a.transpose %*% a).collect()
+    val g = gram(a)
     val spark2 = spark
     import spark2.implicits._
     (for (i <- 0 until P; j <- 0 until P) yield
@@ -56,7 +65,7 @@ object LinalgQueries {
       IndexedRow(i, Vectors.dense(v)) }
     val n = rows.count()
     val a = DsArray.fromIndexedRows(rows, n, P, 64, 4) // 8×2 block grid
-    val g = (a.transpose %*% a).collect()
+    val g = gram(a)
     val spark2 = spark
     import spark2.implicits._
     (for (i <- 0 until P; j <- 0 until P) yield
@@ -296,7 +305,7 @@ object LinalgQueries {
     }
     val n = base.map(_._1).max() + 1
     val a = DsArray.fromCOO(entries, n, P, 64, 4)
-    val g = (a.transpose %*% a).collect()
+    val g = gram(a)
     val coo = base.map { case (_, v) =>
       val kept = v.iterator.zipWithIndex.filter { case (x, _) => math.abs(x) > 0.15 }.toArray
       (kept.map(_._2), kept.map(_._1))

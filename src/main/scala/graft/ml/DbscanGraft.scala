@@ -171,10 +171,11 @@ object DbscanGraft {
       .select(col("vec_id"),
         array(element_at(col("embedding"), 1).cast("double"),
           element_at(col("embedding"), 2).cast("double")).as("v"))
-    val labels = fit(df, "vec_id", "v", QueryEps, QueryMinPts)
-    graft.GateUtil.pinned(
-      labels.groupBy("cluster").agg(count(lit(1)).as("n_points"))
-        .orderBy(col("n_points").desc, col("cluster")))(labels.unpersist(false))
+    graft.GateUtil.pinned { s =>
+      s.own(fit(df, "vec_id", "v", QueryEps, QueryMinPts))
+        .groupBy("cluster").agg(count(lit(1)).as("n_points"))
+        .orderBy(col("n_points").desc, col("cluster"))
+    }
   }
 
   def oracle: String =

@@ -233,15 +233,16 @@ object GmmGraft {
     }
     val bc = vecs.sparkContext.broadcast((rsStack, wmFlat, cArr))
     // direct netlib calls (Breeze routes through the same BLAS, but the
-    // raw API gives dsyrk — half the moment flops, accumulating IN the
-    // partition accumulator (beta=1) — and buffer reuse across batches
+    // raw API accumulates the dgemm moment update IN the partition
+    // accumulator (beta=1) and reuses buffers across batches)
     val batchCap = 1024
     val out = vecs.mapPartitions { it =>
       val blas = dev.ludovic.netlib.blas.BLAS.getInstance()
       val (rsf, wmf, cc) = bc.value
       val rs = new Array[Double](k)
       val rx = new Array[Double](k * p)      // p×k col-major
-      // upper triangles only (dsyrk); mirrored once after the reduce
+      // full p×p blocks (dgemm NT fills both triangles); made exactly
+      // symmetric once after the reduce
       val rxx = new Array[Double](k * p * p) // component j at offset j·p²
       var ll = 0.0
       val gBuf = new Array[Double](kp * batchCap) // whitened coords
@@ -322,7 +323,8 @@ object GmmGraft {
     val rxxM = Array.tabulate(k) { j2 =>
       val m = BDM.create(p, p,
         java.util.Arrays.copyOfRange(out._3, j2 * p * p, (j2 + 1) * p * p))
-      // mirror the dsyrk upper triangle into the lower half
+      // copy the upper triangle over the lower half: dgemm filled both,
+      // but its (i,j) and (j,i) sums may round differently
       var c = 1
       while (c < p) {
         var r = 0

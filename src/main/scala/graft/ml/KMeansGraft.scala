@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.GateUtil._
 import breeze.linalg.{DenseMatrix => BDM}
 import graft.Tables
 import graft.functions.VectorFns._
@@ -419,12 +420,12 @@ object KMeansGraft {
     * Scale: the fit is [[fit]]'s treeAggregate Lloyd; the index is ONE
     * extra scan evaluating k codegen'd distance chains per row,
     * partial-aggregated to k rows. */
-  def silhouette(spark: SparkSession, dir: String): DataFrame = {
+  def silhouette(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     import org.apache.spark.sql.Column
     val pts = Tables.embeddings(spark, dir)
       .select(col("vec_id"),
         transform(slice(col("embedding"), 1, QDim), x => x.cast("double")).as("v"))
-      .cache()
+      .persisted
     val model = fit(pts, "v", "vec_id", K, Iters)
     def dist(c: Array[Double]): Column =
       (0 until QDim).map { i =>
@@ -440,8 +441,8 @@ object KMeansGraft {
           |  ELSE round((d2 - d1) * 1000000 / d2) END AS BIGINT) AS s_micro""".stripMargin)
       .groupBy("cluster")
       .agg(count(lit(1)).as("n_points"), sum("s_micro").as("ssum"))
-      .localCheckpoint(true) // k rows; frees the cached points below
-    pts.unpersist(false)
+      .checkpointed // k rows; the cached points are dead after it
+    s.free(pts)
     val glob = per.agg(
       expr("CAST(sum(ssum) DIV sum(n_points) AS BIGINT)").as("overall_micro"))
     per.crossJoin(broadcast(glob))

@@ -5,7 +5,7 @@ import org.apache.spark.ml.classification.{DecisionTreeClassifier, LinearSVC, Ra
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.recommendation.{ALS, ALSModel}
 import org.apache.spark.ml.regression.{DecisionTreeRegressor, RandomForestRegressor}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftStorageBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** MLlib-backed estimators where the built-in is semantically equivalent
@@ -209,28 +209,36 @@ object MllibWrappers {
     * (oracle-derived) + an objective-descent flag across 2→4→8
     * iterations (seeded init ⇒ the three fits share the same iterate
     * sequence, and ALS half-sweeps are exact minimizers ⇒ monotone). */
-  def alsQuery(spark: SparkSession, dir: String): DataFrame = {
-    val ratings = Tables.events(spark, dir)
+  def alsQuery(spark: SparkSession, dir: String): DataFrame = graft.GateUtil.scoped { s =>
+    val ratings = s.persist(Tables.events(spark, dir)
       .select(col("user_id").cast("int").as("user"),
         get_json_object(col("props"), "$.k").cast("int").as("item"),
         col("value").cast("float").as("rating"))
       .filter(col("item").isNotNull)
-      .groupBy("user", "item").agg(avg("rating").cast("float").as("rating"))
-      .cache()
+      .groupBy("user", "item").agg(avg("rating").cast("float").as("rating")))
     // few distinct users/items at any SF: fewer factor blocks = fewer
     // shuffle files per iteration (default 10×10 blocks is for
     // billion-rating scale; at that scale raise blocks, not lower)
-    def fitIters(n: Int): ALSModel = new ALS().setRank(8).setMaxIter(n)
-      .setSeed(42).setRegParam(0.1)
-      .setNumUserBlocks(4).setNumItemBlocks(4)
-      .setUserCol("user").setItemCol("item").setRatingCol("rating")
-      .fit(ratings)
+    def fitIters(n: Int): ALSModel = {
+      val m = new ALS().setRank(8).setMaxIter(n)
+        .setSeed(42).setRegParam(0.1)
+        .setNumUserBlocks(4).setNumItemBlocks(4)
+        .setUserCol("user").setItemCol("item").setRatingCol("rating")
+        .fit(ratings)
+      // the fit leaves its factor RDDs (and one in their lineage) cached
+      val seen = scala.collection.mutable.Set.empty[Int]
+      def cached(r: org.apache.spark.rdd.RDD[_]): Unit = if (seen.add(r.id)) {
+        if (r.getStorageLevel.isValid) s.own(r)
+        r.dependencies.foreach(d => cached(d.rdd))
+      }
+      Seq(m.userFactors, m.itemFactors).flatMap(GraftStorageBridge.leafRdds).foreach(cached)
+      m
+    }
     val objs = Seq(2, 4, 8).map(n => alsObjective(fitIters(n), ratings, 0.1))
     val desc = if (objs.sliding(2).forall { case Seq(a, b) => b <= a * (1 + 1e-9) })
       1 else 0
     val users = ratings.groupBy("user").agg(count(lit(1)).as("n_ratings"))
       .orderBy("user").limit(10).collect()
-    ratings.unpersist(false)
     val spark2 = spark
     import spark2.implicits._
     users.map(r => (r.getInt(0), r.getLong(1), desc))

@@ -38,10 +38,13 @@ object Components {
     * them back with their own id if needed. The result is materialized
     * before returning (the input is only scanned during this call).
     *
-    * Cache contract: in the GraphX regime the returned frame is CACHED
-    * (its lineage runs through Pregel; recomputing it would redo the
-    * whole CC). Callers must unpersist the returned handle once their
-    * result is materialized — on the driver-path local relation that
+    * Cache contract (GateUtil's rule for a result as large as its
+    * data): the call frees every block it created except the result.
+    * In the GraphX and dfjump regimes the returned frame is CACHED —
+    * its lineage runs through Pregel or through checkpoints already
+    * freed, so it must not be recomputed — and the caller owns it:
+    * unpersist it once the dependent result is materialized, or hand it
+    * to a scope with `own`. On the driver-path local relation that
     * unpersist is a harmless no-op. */
   def connected(edges: DataFrame, maxDriverEdges: Long = 5000000L): DataFrame = {
     val spark = edges.sparkSession
@@ -106,130 +109,126 @@ object Components {
 
   /** The high-diameter escape regime (NOT the default — see the object
     * scaladoc for the 10M-edge measurement that kept Pregel in front on
-    * low-diameter graphs): min-label propagation through the edges,
-    * interleaved with one pointer jump per round (lbl ← lbl(lbl)), over
-    * a (id, lbl) node table. Invariants: lbl is always a node id of the
-    * same component and non-increasing, so labels terminate at a
-    * fixpoint where (a) every edge has equal endpoint labels (the
-    * propagation step changed nothing) — labels are constant per
-    * component — and (b) since the component's min node μ satisfies
+    * low-diameter graphs): min-label propagation through the edges, with
+    * each proposal also HOOKING the receiver's label node (the node the
+    * receiver's label names gets the smaller label too —
+    * Shiloach–Vishkin hooking), interleaved with one pointer jump per
+    * round (lbl ← lbl(lbl)), over a (id, lbl) node table. Invariants:
+    * lbl is always a node id of the same component and non-increasing,
+    * so labels terminate at a fixpoint where (a) every edge has equal
+    * endpoint labels (the propagation step changed nothing) — labels
+    * are constant per component — and (b) since the component's min node μ satisfies
     * lbl(μ) ≤ μ with lbl a member id ≥ μ, that constant is μ. The jump
-    * halves pointer-chain depth each round, so convergence is
-    * O(log n) rounds on any topology (vs O(diameter) message passing).
+    * halves pointer-chain depth each round and the hook merges whole
+    * label trees at once, so rounds stay logarithmic whatever the ids'
+    * order along a path. Without the hook a label reaches only its
+    * holder's neighbors: 4 chains of 250 nodes with shuffled ids took
+    * 126 rounds, past the 64-round cap; with it they take 12
+    * (ComponentsSpec pins that shape).
     *
-    * Plan shape per round: one edge-grain join + scalar min aggregate
-    * (edges cached pre-partitioned on src; only the node-sized label
-    * table re-shuffles), checkpointed ONCE so the jump self-join reads a
-    * materialized leaf on both sides (un-checkpointed, the expensive
-    * edge-grain stage could execute twice per round unless ReuseExchange
-    * fired — r14 advice), then one node-grain self-join for the jump.
-    * The per-round change count rides the same pass (sum of chg flags) —
-    * no extra comparison job. Each round frees the PREVIOUS round's
-    * checkpoint blocks the moment the new table is materialized (the
-    * blocks are tracked via a getPersistentRDDs diff — Dataset.unpersist
-    * cannot reach a localCheckpoint's RDD), so peak residency is ≤3 node
-    * tables regardless of round count; rounds are hard-capped at 64
-    * (log₂-bounded convergence makes the cap unreachable). */
-  private[graft] def connectedDfJump(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    val sc = spark.sparkContext
-    // eager localCheckpoint + handles to the persisted RDD blocks it
-    // registered, so each round can free its predecessor (calls here are
-    // sequential, so the before/after diff is exact)
-    def ckpt(df: DataFrame): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint(true)
-      val added = sc.getPersistentRDDs
-        .collect { case (id, r) if !before(id) => r }.toSeq
-      (out, added)
+    * Plan shape per round: the delta's edge rows joined to the label
+    * table on dst (the hook target) + one min aggregate over node and
+    * hook keys (edges cached pre-partitioned on src; only node-sized
+    * tables and delta rows re-shuffle), checkpointed ONCE so the jump
+    * self-join reads a materialized leaf on both sides (un-checkpointed,
+    * the expensive edge-grain stage could execute twice per round unless
+    * ReuseExchange fired — r14 advice). The per-round change count rides
+    * the same pass (sum of chg flags). One GateUtil scope owns every
+    * block: each round frees the previous label table once the new one
+    * is materialized (peak residency ≤3 node tables), and the scope's
+    * measured leaf sizes keep each round's join estimate from
+    * compounding into a plan that takes seconds to size. Rounds are
+    * hard-capped at 64. */
+  private[graft] def connectedDfJump(edges: DataFrame): DataFrame =
+    graft.GateUtil.scoped { s =>
+      val sym = edges.toDF("src", "dst")
+        .union(edges.toDF("dst", "src").select(col("src"), col("dst")))
+      // r15 optimization (guide §2.4): dedup INSIDE the src layout — the
+      // previous distinct() + repartition(src) paid two full 2m-row
+      // exchanges (hash(src,dst) for the aggregate, then hash(src));
+      // hash(src) partitioning already co-locates equal (src,dst) pairs
+      // (subset-satisfies), so one exchange feeds both the dedup
+      // aggregate and the cached per-round join layout.
+      val es = s.persist(sym
+        .filter(col("src") =!= col("dst"))
+        .repartition(col("src"))
+        .dropDuplicates(Seq("src", "dst")))
+      // node universe from the UNfiltered endpoints: a self-loop-only node
+      // is still a (singleton) component — the union-find regime labels it
+      // with its own id, and the regimes must agree
+      var p = s.checkpoint(sym.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("lbl")))
+      var rounds = 0
+      var changed = 1L
+      // semi-naive delta propagation (r15 optimization, guide §2.3):
+      // labels only DECREASE, and a neighbor that last changed in round r
+      // already contributed that value to every neighbor's min in round
+      // r+1 — so each round's edge-grain join needs only the nodes whose
+      // label changed last round, never the whole table. Inductively the
+      // label evolution is IDENTICAL to the all-nodes recurrence (an
+      // unchanged neighbor's contribution is already folded into p via
+      // least; a hook from an unchanged sender carries a label no smaller
+      // than the receiver's, so skipping it changes nothing either), so
+      // the fixpoint proof below carries over verbatim; the join output
+      // just shrinks geometrically as the graph settles.
+      var delta = p // round 1: every node is freshly labeled
+      while (changed > 0 && rounds < 64) {
+        // One plan + ONE checkpoint per round (r15 optimization, guide
+        // §2.4): neighbor-minimum propagation followed by the pointer
+        // jump lbl ← p.lbl(lbl) resolved against the PREVIOUS round's
+        // checkpointed table `p` — a materialized leaf, so referencing it
+        // three times costs nothing (the r14 two-checkpoint structure
+        // existed only so the jump's self-join would not re-execute the
+        // edge-grain stage; jumping through `p` removes the need for the
+        // intermediate materialization entirely). Contraction per round
+        // is (p + one-hop) composed with p instead of with itself — the
+        // same geometric depth halving (ComponentsSpec's chain cases pin
+        // the round count inside the 64-round require), at half the
+        // checkpoint cost per round. Invariants unchanged: lbl stays a
+        // same-component node id (p.lbl(v) is in v's component), stays
+        // non-increasing (p.lbl(v) ≤ v), and chg=0 still certifies the
+        // fixpoint — NO label moved (propagation or jump), so p was
+        // already component-constant at the min id.
+        // a checkpoint per round — without truncation the tree
+        // Catalyst re-analyzes grows ~3× per round; the checkpoint
+        // materializes the round AND cuts the plan to a leaf.
+        val sent = es
+          .join(delta.select(col("id").as("src"), col("lbl").as("slbl")), "src")
+          .join(p.select(col("id").as("dst"), col("lbl").as("dlbl")), "dst")
+        val cand = sent.select(col("dst").as("id"), col("slbl"))
+          .union(sent.select(col("dlbl").as("id"), col("slbl")))
+          .groupBy("id").agg(min("slbl").as("nmin"))
+        val prop = p.join(cand, Seq("id"), "left")
+          .select(col("id"), col("lbl").as("plbl"),
+            least(col("lbl"), coalesce(col("nmin"), col("lbl"))).as("lbl"))
+        // round 1's jump is provably the identity (p maps id → id), so
+        // the node-grain self-join is skipped there
+        val jumped =
+          if (rounds == 0) prop
+          else prop.as("a")
+            .join(p.select(col("id").as("jid"), col("lbl").as("jlbl")).as("b"),
+              col("a.lbl") === col("b.jid"))
+            .select(col("a.id").as("id"), col("b.jlbl").as("lbl"),
+              col("a.plbl").as("plbl"))
+        val next = s.checkpoint(jumped
+          .select(col("id"), col("lbl"),
+            when(col("lbl") < col("plbl"), 1L).otherwise(0L).as("chg")))
+        // coalesce: sum over zero rows is NULL — an empty edge frame must
+        // terminate cleanly, not NPE (r14 advice)
+        changed = next.agg(coalesce(sum("chg"), lit(0L)).as("c"))
+          .head().getLong(0)
+        // `next` is materialized — the previous label table is dead
+        s.free(p)
+        delta = next.filter(col("chg") === 1L).select("id", "lbl")
+        p = next.select("id", "lbl")
+        rounds += 1
+      }
+      require(changed == 0, s"connectedDfJump did not converge in $rounds rounds")
+      // handed to the caller (Components' cache contract), not recorded
+      val v = p.select(col("id"), col("lbl").as("comp")).cache()
+      v.count() // materialize while the label/edge blocks are alive
+      v
     }
-    val sym = edges.toDF("src", "dst")
-      .union(edges.toDF("dst", "src").select(col("src"), col("dst")))
-    // r15 optimization (guide §2.4): dedup INSIDE the src layout — the
-    // previous distinct() + repartition(src) paid two full 2m-row
-    // exchanges (hash(src,dst) for the aggregate, then hash(src));
-    // hash(src) partitioning already co-locates equal (src,dst) pairs
-    // (subset-satisfies), so one exchange feeds both the dedup
-    // aggregate and the cached per-round join layout.
-    val es = sym
-      .filter(col("src") =!= col("dst"))
-      .repartition(col("src"))
-      .dropDuplicates(Seq("src", "dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // node universe from the UNfiltered endpoints: a self-loop-only node
-    // is still a (singleton) component — the union-find regime labels it
-    // with its own id, and the regimes must agree
-    var (p, pBlocks) = ckpt(sym.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("lbl")))
-    var rounds = 0
-    var changed = 1L
-    // semi-naive delta propagation (r15 optimization, guide §2.3):
-    // labels only DECREASE, and a neighbor that last changed in round r
-    // already contributed that value to every neighbor's min in round
-    // r+1 — so each round's edge-grain join needs only the nodes whose
-    // label changed last round, never the whole table. Inductively the
-    // label evolution is IDENTICAL to the all-nodes recurrence (an
-    // unchanged neighbor's contribution is already folded into p via
-    // least), so the fixpoint proof below carries over verbatim; the
-    // join output just shrinks geometrically as the graph settles.
-    var delta = p // round 1: every node is freshly labeled
-    while (changed > 0 && rounds < 64) {
-      // One plan + ONE checkpoint per round (r15 optimization, guide
-      // §2.4): neighbor-minimum propagation followed by the pointer
-      // jump lbl ← p.lbl(lbl) resolved against the PREVIOUS round's
-      // checkpointed table `p` — a materialized leaf, so referencing it
-      // three times costs nothing (the r14 two-checkpoint structure
-      // existed only so the jump's self-join would not re-execute the
-      // edge-grain stage; jumping through `p` removes the need for the
-      // intermediate materialization entirely). Contraction per round
-      // is (p + one-hop) composed with p instead of with itself — the
-      // same geometric depth halving (ComponentsSpec's chain cases pin
-      // the round count inside the 64-round require), at half the
-      // checkpoint cost per round. Invariants unchanged: lbl stays a
-      // same-component node id (p.lbl(v) is in v's component), stays
-      // non-increasing (p.lbl(v) ≤ v), and chg=0 still certifies the
-      // fixpoint — NO label moved (propagation or jump), so p was
-      // already component-constant at the min id.
-      // localCheckpoint per round — without truncation the tree
-      // Catalyst re-analyzes grows ~3× per round; the checkpoint
-      // materializes the round AND cuts the plan to a leaf.
-      val cand = es
-        .join(delta.select(col("id").as("src"), col("lbl").as("slbl")), "src")
-        .groupBy(col("dst").as("id")).agg(min("slbl").as("nmin"))
-      val prop = p.join(cand, Seq("id"), "left")
-        .select(col("id"), col("lbl").as("plbl"),
-          least(col("lbl"), coalesce(col("nmin"), col("lbl"))).as("lbl"))
-      // round 1's jump is provably the identity (p maps id → id), so
-      // the node-grain self-join is skipped there
-      val jumped =
-        if (rounds == 0) prop
-        else prop.as("a")
-          .join(p.select(col("id").as("jid"), col("lbl").as("jlbl")).as("b"),
-            col("a.lbl") === col("b.jid"))
-          .select(col("a.id").as("id"), col("b.jlbl").as("lbl"),
-            col("a.plbl").as("plbl"))
-      val (next, nextBlocks) = ckpt(jumped
-        .select(col("id"), col("lbl"),
-          when(col("lbl") < col("plbl"), 1L).otherwise(0L).as("chg")))
-      // coalesce: sum over zero rows is NULL — an empty edge frame must
-      // terminate cleanly, not NPE (r14 advice)
-      changed = next.agg(coalesce(sum("chg"), lit(0L)).as("c"))
-        .head().getLong(0)
-      // `next` is materialized — the previous label table is dead;
-      // free its blocks now
-      pBlocks.foreach(_.unpersist(false))
-      delta = next.filter(col("chg") === 1L).select("id", "lbl")
-      p = next.select("id", "lbl")
-      pBlocks = nextBlocks
-      rounds += 1
-    }
-    require(changed == 0, s"connectedDfJump did not converge in $rounds rounds")
-    val v = p.select(col("id"), col("lbl").as("comp")).cache()
-    v.count() // materialize while the label/edge caches are alive
-    pBlocks.foreach(_.unpersist(false))
-    es.unpersist(false)
-    v
-  }
 
   /** GraphX Pregel connected components — the default large-graph
     * regime (measured faster than [[connectedDfJump]] on low-diameter

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GateUtil._
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -258,7 +259,7 @@ object DataQuality {
     * partial+final (feature, x, y) rollup (≤ Σ|Xᵢ|·2 cells), marginal
     * frames that are cell-table-sized, and a features-sized output —
     * the fact table is never shuffled, only its contingency cells. */
-  def chi2Select(spark: SparkSession, dir: String): DataFrame = {
+  def chi2Select(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val st = Tables.lineitem(spark, dir).selectExpr(
       """stack(4,
         |  'returnflag', l_returnflag,
@@ -271,11 +272,11 @@ object DataQuality {
   }
 
   /** Core over any (feature, x, y) frame. */
-  def chi2SelectDf(st: DataFrame): DataFrame = {
+  def chi2SelectDf(st: DataFrame)(implicit s: Scope): DataFrame = {
     // eager checkpoint: marginals + grid all derive from the cell rollup —
     // without it each of the four branches re-scans the fact table
     val cells = st.groupBy("feature", "x", "y").agg(count(lit(1)).as("c_xy"))
-      .localCheckpoint(true)
+      .checkpointed
     val fx = cells.groupBy("feature", "x").agg(sum("c_xy").as("c_x"))
     val fy = cells.groupBy("feature", "y").agg(sum("c_xy").as("c_y"))
     val fn = cells.groupBy("feature").agg(sum("c_xy").as("n"),
@@ -315,7 +316,7 @@ object DataQuality {
     * Scale: the chi2 cell rollup (one fact scan fanned by the stack)
     * plus a features-sized broadcast of (n, nx, ny) — no second scan of
     * anything fact-sized. */
-  def cramersV(spark: SparkSession, dir: String): DataFrame = {
+  def cramersV(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val st = Tables.lineitem(spark, dir).selectExpr(
       """stack(4,
         |  'returnflag', l_returnflag,
@@ -323,7 +324,7 @@ object DataQuality {
         |  'linenumber', CAST(l_linenumber AS STRING),
         |  'disc_pct',   CAST(CAST(round(l_discount * 100) AS INT) AS STRING))
         |  AS (feature, x)""".stripMargin,
-      "CAST(l_quantity > 25 AS INT) AS y").localCheckpoint(true)
+      "CAST(l_quantity > 25 AS INT) AS y").checkpointed
     val chi = chi2SelectDf(st).select("feature", "df", "chi2_micro")
     val fstats = st.groupBy("feature").agg(count(lit(1)).as("n"),
       countDistinct("x").as("nx"), countDistinct("y").as("ny"))

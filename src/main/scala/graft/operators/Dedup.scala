@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GateUtil._
 import graft.Tables
 import graft.functions.TextFns._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -67,30 +68,30 @@ object Dedup {
     * full shingle sets, so a pair is only missed if ALL its shared
     * shingles are ultra-common — at j >= 0.8 pairs share most of their
     * (mostly rare) shingles, so recall stays ~1. */
-  def ngramJaccard(spark: SparkSession, dir: String, dfCap: Int = 0): DataFrame = {
-    val sh = shinglesDf(spark, dir).cache()
-    val cap = if (dfCap >= 0) dfCap else autoDfCap(sh.count())
-    // shingle strings collapse to 64-bit hashes BEFORE the inverted-index
-    // self-join (the r12 q_jaccard_prefix fix, 10× ratio 4.15→1.36): the
-    // candidate shuffle moves 8-byte keys instead of n-gram text, and the
-    // equi-join compares longs. Set sizes and the exact-Jaccard arithmetic
-    // are unchanged; a 2⁻⁶⁴ per-shared-shingle hash collision is the only
-    // semantic delta (the oracle's string join agrees at every gate scale).
-    val exAll = sh.select(col("doc_id"), explode(col("sh")).as("s0"))
-      .select(col("doc_id"), xxhash64(col("s0")).as("s"))
-    val ex =
-      if (cap <= 0) exAll
-      else {
-        val rare = exAll.groupBy("s").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= cap).select("s")
-        exAll.join(rare, "s")
-      }
-    val inter = ex.as("a").join(ex.as("b"),
-        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-    val sz = sh.select(col("doc_id"), size(col("sh")).as("n"))
-    graft.GateUtil.pinned(
+  def ngramJaccard(spark: SparkSession, dir: String, dfCap: Int = 0): DataFrame =
+    pinned { implicit s =>
+      val sh = shinglesDf(spark, dir).persisted
+      val cap = if (dfCap >= 0) dfCap else autoDfCap(sh.count())
+      // shingle strings collapse to 64-bit hashes BEFORE the inverted-index
+      // self-join (the r12 q_jaccard_prefix fix, 10× ratio 4.15→1.36): the
+      // candidate shuffle moves 8-byte keys instead of n-gram text, and the
+      // equi-join compares longs. Set sizes and the exact-Jaccard arithmetic
+      // are unchanged; a 2⁻⁶⁴ per-shared-shingle hash collision is the only
+      // semantic delta (the oracle's string join agrees at every gate scale).
+      val exAll = sh.select(col("doc_id"), explode(col("sh")).as("s0"))
+        .select(col("doc_id"), xxhash64(col("s0")).as("s"))
+      val ex =
+        if (cap <= 0) exAll
+        else {
+          val rare = exAll.groupBy("s").agg(count(lit(1)).as("df"))
+            .filter(col("df") <= cap).select("s")
+          exAll.join(rare, "s")
+        }
+      val inter = ex.as("a").join(ex.as("b"),
+          col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
+        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        .agg(count(lit(1)).as("inter"))
+      val sz = sh.select(col("doc_id"), size(col("sh")).as("n"))
       inter
         .join(sz.as("x"), col("doc_a") === col("x.doc_id"))
         .join(sz.as("y"), col("doc_b") === col("y.doc_id"))
@@ -98,8 +99,8 @@ object Dedup {
           col("inter").cast("double") / (col("x.n") + col("y.n") - col("inter")))
         .filter(col("jaccard") >= 0.8)
         .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("doc_a", "doc_b"))(sh.unpersist(false))
-  }
+        .orderBy("doc_a", "doc_b")
+    }
 
   /** One-row candidate-generation census over an arbitrary
     * (doc_id, text) frame at a given dfCap — the measurement surface
@@ -110,37 +111,34 @@ object Dedup {
     * growing ~quadratically in the hot df while the capped path stays
     * ~linear in the corpus. Same explode/cap/join shape as
     * [[ngramJaccard]]; counts only, no Jaccard verify stage. */
-  def ngramJaccardCandidateCensus(docs: DataFrame, dfCap: Int): DataFrame = {
-    val sh = docs.select(col("doc_id"),
-      wordShingles(tokens(col("text")), 3).as("sh")).cache()
-    val nDocs = sh.count()
-    val cap = if (dfCap >= 0) dfCap else autoDfCap(nDocs)
-    val exAll = sh.select(col("doc_id"), explode(col("sh")).as("s0"))
-      .select(col("doc_id"), xxhash64(col("s0")).as("s"))
-    val ex =
-      if (cap <= 0) exAll
-      else {
-        val rare = exAll.groupBy("s").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= cap).select("s")
-        exAll.join(rare, "s")
-      }
-    val exC = ex.cache()
-    val nKept = exC.count()
-    val joined = exC.as("a").join(exC.as("b"),
-        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .cache()
-    val nJoinRows = joined.count()
-    val nCandPairs = joined.distinct().count()
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.GateUtil.pinned(
+  def ngramJaccardCandidateCensus(docs: DataFrame, dfCap: Int): DataFrame =
+    pinned { implicit s =>
+      val sh = docs.select(col("doc_id"),
+        wordShingles(tokens(col("text")), 3).as("sh")).persisted
+      val nDocs = sh.count()
+      val cap = if (dfCap >= 0) dfCap else autoDfCap(nDocs)
+      val exAll = sh.select(col("doc_id"), explode(col("sh")).as("s0"))
+        .select(col("doc_id"), xxhash64(col("s0")).as("s"))
+      val ex =
+        if (cap <= 0) exAll
+        else {
+          val rare = exAll.groupBy("s").agg(count(lit(1)).as("df"))
+            .filter(col("df") <= cap).select("s")
+          exAll.join(rare, "s")
+        }
+      val exC = ex.persisted
+      val nKept = exC.count()
+      val joined = exC.as("a").join(exC.as("b"),
+          col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        .persisted
+      val nJoinRows = joined.count()
+      val nCandPairs = joined.distinct().count()
+      val spark = docs.sparkSession
+      import spark.implicits._
       Seq((nDocs, cap.toLong, nKept, nJoinRows, nCandPairs))
-        .toDF("n_docs", "df_cap", "n_kept_rows", "n_join_rows",
-          "n_cand_pairs")) {
-      joined.unpersist(false); exC.unpersist(false); sh.unpersist(false)
+        .toDF("n_docs", "df_cap", "n_kept_rows", "n_join_rows", "n_cand_pairs")
     }
-  }
 
   /** Benchmark decontamination (GPT-3-style n-gram overlap): flag corpus
     * documents sharing ANY word-3-gram with a held-out benchmark set,
@@ -305,24 +303,23 @@ object Dedup {
   }
 
   /** Core over any (doc_id, sh: array<string>) distinct-shingle frame. */
-  def prefixJaccardDf(shIn: DataFrame): DataFrame = {
+  def prefixJaccardDf(shIn: DataFrame): DataFrame = pinned { implicit s =>
     // eager: the one query below reads sh from FOUR subtrees (self-join
     // a/b + the two verify joins); a lazy cache lets the first wave of
     // concurrent tasks each re-run the tokenize+shingle scan before any
     // partition is cached — materialize once, then every reader hits it
-    val sh = shIn.cache()
+    val sh = shIn.persisted
     sh.count()
     val (_, cand) = prefixStages(sh)
-    graft.GateUtil.pinned(
-      cand
-        .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sha")), "doc_a")
-        .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("shb")), "doc_b")
-        .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
-        .withColumn("jaccard", col("inter").cast("double")
-          / (size(col("sha")) + size(col("shb")) - col("inter")))
-        .filter(col("jaccard") >= PrefixJacT)
-        .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("doc_a", "doc_b"))(sh.unpersist(false))
+    cand
+      .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sha")), "doc_a")
+      .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("shb")), "doc_b")
+      .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
+      .withColumn("jaccard", col("inter").cast("double")
+        / (size(col("sha")) + size(col("shb")) - col("inter")))
+      .filter(col("jaccard") >= PrefixJacT)
+      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
+      .orderBy("doc_a", "doc_b")
   }
 
   /** Fan-out census for [[prefixJaccard]] (judge r10 ask #4: the 10×
@@ -331,13 +328,13 @@ object Dedup {
     * rows, prefix-index rows, candidate pairs surviving the lossless
     * prunes, and pairs passing the full Jaccard verify. candidates/doc
     * is the growth constant a 100 TB run budgets against. */
-  def prefixJaccardCensus(spark: SparkSession, dir: String): DataFrame = {
-    val sh = shinglesDf(spark, dir).cache()
+  def prefixJaccardCensus(spark: SparkSession, dir: String): DataFrame = scoped { implicit s =>
+    val sh = shinglesDf(spark, dir).persisted
     val (pref, cand) = prefixStages(sh)
     val nDocs = sh.count()
     val nShingleRows = sh.agg(sum(size(col("sh")))).head().getLong(0)
     val nPref = pref.count()
-    val candC = cand.cache()
+    val candC = cand.persisted
     val nCand = candC.count()
     val nPass = candC
       .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sha")), "doc_a")
@@ -346,8 +343,6 @@ object Dedup {
       .filter(col("inter").cast("double")
         / (size(col("sha")) + size(col("shb")) - col("inter")) >= PrefixJacT)
       .count()
-    candC.unpersist(false)
-    sh.unpersist(false)
     val spark2 = spark
     import spark2.implicits._
     Seq((nDocs, nShingleRows, nPref, nCand, nPass))
@@ -376,13 +371,14 @@ object Dedup {
     * same md5-derived position hashes. Reports per-source flagged vs
     * exact-truth counts: n_false_pos = flagged − true ≥ 0 quantifies the
     * precision actually traded for the broadcast. */
-  def bloomDecontaminate(spark: SparkSession, dir: String): DataFrame =
+  def bloomDecontaminate(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     bloomDecontaminateDf(Tables.documents(spark, dir)
       .withColumn("is_bench",
         pmod(hash56(col("doc_id").cast("string")), lit(20)) === 0))
+  }
 
   /** Core over any (doc_id, source, text, is_bench) frame. */
-  def bloomDecontaminateDf(docs: DataFrame): DataFrame = {
+  def bloomDecontaminateDf(docs: DataFrame)(implicit s: Scope): DataFrame = {
     def positions(s: Column) =
       posexplode(array((0 until BloomHashes).map(i =>
         pmod(hash56(concat(lit(i.toString), lit("#"), s)), lit(BloomBits))): _*))
@@ -399,7 +395,7 @@ object Dedup {
     val sh = docs.select(col("doc_id"), col("is_bench"),
       explode(wordShingles(tokens(col("text")), 3)).as("s"))
     val benchSh = sh.filter(col("is_bench")).select("s").distinct()
-      .localCheckpoint(true)
+      .checkpointed
     val bits = benchSh.select(positions(col("s")).as(Seq("i", "pos")))
       .select("pos").distinct()
     val corpSh = sh.filter(!col("is_bench")).select("doc_id", "s")
@@ -484,19 +480,18 @@ object Dedup {
 
   /** MinHash signature matrix (16 perms) → LSH banding (4 bands × 4 rows)
     * → candidate pairs sharing a band → exact-Jaccard filter >= 0.5. */
-  def minhashLsh(spark: SparkSession, dir: String): DataFrame = {
-    val sh = shinglesDf(spark, dir).cache()
+  def minhashLsh(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
+    val sh = shinglesDf(spark, dir).persisted
     val (_, cand) = sigAndCands(sh)
-    graft.GateUtil.pinned(
-      cand
-        .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sha")), "doc_a")
-        .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("shb")), "doc_b")
-        .withColumn("jaccard",
-          size(array_intersect(col("sha"), col("shb"))).cast("double") /
-            size(array_union(col("sha"), col("shb"))))
-        .filter(col("jaccard") >= 0.5)
-        .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("doc_a", "doc_b"))(sh.unpersist(false))
+    cand
+      .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sha")), "doc_a")
+      .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("shb")), "doc_b")
+      .withColumn("jaccard",
+        size(array_intersect(col("sha"), col("shb"))).cast("double") /
+          size(array_union(col("sha"), col("shb"))))
+      .filter(col("jaccard") >= 0.5)
+      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
+      .orderBy("doc_a", "doc_b")
   }
 
   val CalErrBucketBp = 500L
@@ -513,8 +508,8 @@ object Dedup {
     * Scale: candidates only (the banding bound — never all pairs); the
     * signature compare is 16 integer equality checks per pair; the
     * census is a ≤41-bucket rollup. */
-  def minhashCalibration(spark: SparkSession, dir: String): DataFrame = {
-    val sh = shinglesDf(spark, dir).cache()
+  def minhashCalibration(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
+    val sh = shinglesDf(spark, dir).persisted
     val (sig, cand) = sigAndCands(sh)
     val matches = (0 until NumPerms)
       .map(i => when(col(s"a.m$i") === col(s"b.m$i"), 1L).otherwise(0L))
@@ -530,15 +525,14 @@ object Dedup {
       .selectExpr("doc_a", "doc_b",
         """CAST((size(array_intersect(sha, shb)) * 10000)
           | DIV size(array_union(sha, shb)) AS BIGINT) AS exact_bp""".stripMargin)
-    graft.GateUtil.pinned(
-      mm.join(ex, Seq("doc_a", "doc_b"))
-        .selectExpr("est_bp", "exact_bp",
-          s"(est_bp - exact_bp) DIV $CalErrBucketBp AS err_bucket")
-        .groupBy("err_bucket")
-        .agg(count(lit(1)).as("n_pairs"),
-          expr("sum(est_bp) DIV count(1)").as("avg_est_bp"),
-          expr("sum(exact_bp) DIV count(1)").as("avg_exact_bp"))
-        .orderBy("err_bucket"))(sh.unpersist(false))
+    mm.join(ex, Seq("doc_a", "doc_b"))
+      .selectExpr("est_bp", "exact_bp",
+        s"(est_bp - exact_bp) DIV $CalErrBucketBp AS err_bucket")
+      .groupBy("err_bucket")
+      .agg(count(lit(1)).as("n_pairs"),
+        expr("sum(est_bp) DIV count(1)").as("avg_est_bp"),
+        expr("sum(exact_bp) DIV count(1)").as("avg_exact_bp"))
+      .orderBy("err_bucket")
   }
 
   /** Transitive duplicate-cluster resolution — the step the pair-emitting
@@ -549,17 +543,15 @@ object Dedup {
     * SIZE histogram plus a label checksum (sum of winner ids per size),
     * so the oracle pins actual component membership, not just counts —
     * all tiny at any corpus scale. Pairs, not docs, bound every stage. */
-  def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = minhashLsh(spark, dir).select(col("doc_a"), col("doc_b"))
-    val comp = Components.connected(pairs)
-    graft.GateUtil.pinned(
-      comp.groupBy("comp").agg(count(lit(1)).as("csize"))
-        .groupBy("csize")
-        .agg(count(lit(1)).as("n_clusters"),
-          (col("csize") * count(lit(1))).as("n_docs"),
-          sum("comp").as("sum_winner_ids"))
-        .select(col("csize"), col("n_clusters"), col("n_docs"), col("sum_winner_ids"))
-        .orderBy("csize"))(comp.unpersist(false))
+  def dedupClusters(spark: SparkSession, dir: String): DataFrame = pinned { s =>
+    s.own(Components.connected(minhashLsh(spark, dir).select(col("doc_a"), col("doc_b"))))
+      .groupBy("comp").agg(count(lit(1)).as("csize"))
+      .groupBy("csize")
+      .agg(count(lit(1)).as("n_clusters"),
+        (col("csize") * count(lit(1))).as("n_docs"),
+        sum("comp").as("sum_winner_ids"))
+      .select(col("csize"), col("n_clusters"), col("n_docs"), col("sum_winner_ids"))
+      .orderBy("csize")
   }
 
   /** B³ (B-cubed) clustering-quality evaluation of the minhash-LSH
@@ -578,20 +570,20 @@ object Dedup {
     *
     * Scale: components on pair-bounded edges, two doc-keyed rollups, a
     * ≤docs-sized cell table, 1-row arithmetic. */
-  def bcubed(spark: SparkSession, dir: String): DataFrame = {
+  def bcubed(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val truth = Tables.documents(spark, dir)
       .select(col("doc_id"), md5(col("text")).as("t"))
-      .localCheckpoint(true) // feeds pred, sizes, cells, and N
+      .checkpointed // feeds pred, sizes, cells, and N
     val pairs = minhashLsh(spark, dir).select(col("doc_a"), col("doc_b"))
-    val comp = Components.connected(pairs)
+    val comp = s.own(Components.connected(pairs))
     bcubedOf(truth.join(comp, truth("doc_id") === comp("id"), "left")
       .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("p"),
         col("t")))
   }
 
   /** Core over any (doc_id, p predicted-cluster, t truth-class) frame. */
-  private[graft] def bcubedOf(pred0: DataFrame): DataFrame = {
-    val pred = pred0.localCheckpoint(true)
+  private[graft] def bcubedOf(pred0: DataFrame)(implicit s: Scope): DataFrame = {
+    val pred = pred0.checkpointed
     val psize = pred.groupBy("p").agg(count(lit(1)).as("np"))
     val tsize = pred.groupBy("t").agg(count(lit(1)).as("nt"))
     val nF = pred.agg(count(lit(1)).as("n_docs"))
@@ -634,7 +626,7 @@ object Dedup {
     * autoDfCap budget); the GATE pins Similarity.IvfLists so the DuckDB
     * oracle's replayed quantizer stays fixed. */
   def embeddingNearDup(spark: SparkSession, dir: String,
-      nlist: Int = -1): DataFrame = {
+      nlist: Int = -1): DataFrame = pinned { implicit s =>
     import graft.functions.VectorFns
     import graft.ml.KMeansGraft
     val e = Tables.embeddings(spark, dir)
@@ -642,20 +634,19 @@ object Dedup {
         transform(col("embedding"), x => x.cast("double")).as("v"))
       .withColumn("nrm", VectorFns.norm2(col("v")))
       .withColumn("sv", slice(col("v"), 1, Similarity.QuantDim))
-      .cache()
+      .persisted
     val nl = if (nlist > 0) nlist else Similarity.autoNlist(e.count())
     val model = KMeansGraft.fit(e.select(col("vec_id"), col("sv")), "sv",
       "vec_id", nl, maxIter = Similarity.IvfIters)
     val cells = e.withColumn("cell", model.assignCol(col("sv")).cast("long"))
     val cos = VectorFns.dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))
-    graft.GateUtil.pinned(
-      cells.as("a").join(cells.as("b"),
-          col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-        .withColumn("cosine", cos)
-        .filter(col("cosine") >= 0.35)
-        .select(col("a.cell").as("cell"), col("a.vec_id").as("vec_a"),
-          col("b.vec_id").as("vec_b"), round(col("cosine"), 6).as("cosine"))
-        .orderBy("cell", "vec_a", "vec_b"))(e.unpersist(false))
+    cells.as("a").join(cells.as("b"),
+        col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
+      .withColumn("cosine", cos)
+      .filter(col("cosine") >= 0.35)
+      .select(col("a.cell").as("cell"), col("a.vec_id").as("vec_a"),
+        col("b.vec_id").as("vec_b"), round(col("cosine"), 6).as("cosine"))
+      .orderBy("cell", "vec_a", "vec_b")
   }
 
   val ContainmentMicro = 800000L
@@ -671,23 +662,23 @@ object Dedup {
     * (shingle equi-join → shared count → set sizes joined back), and the
     * same `dfCap` hot-shingle knob bounds candidate fan-out at scale
     * (gate mode runs uncapped for the exact oracle). */
-  def containment(spark: SparkSession, dir: String, dfCap: Int = 0): DataFrame = {
-    val sh = shinglesDf(spark, dir).cache()
-    val cap = if (dfCap >= 0) dfCap else autoDfCap(sh.count())
-    val exAll = sh.select(col("doc_id"), explode(col("sh")).as("s"))
-    val ex =
-      if (cap <= 0) exAll
-      else {
-        val rare = exAll.groupBy("s").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= cap).select("s")
-        exAll.join(rare, "s")
-      }
-    val inter = ex.as("a").join(ex.as("b"),
-        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_shared"))
-    val sz = sh.select(col("doc_id"), size(col("sh")).cast("long").as("n"))
-    graft.GateUtil.pinned(
+  def containment(spark: SparkSession, dir: String, dfCap: Int = 0): DataFrame =
+    pinned { implicit s =>
+      val sh = shinglesDf(spark, dir).persisted
+      val cap = if (dfCap >= 0) dfCap else autoDfCap(sh.count())
+      val exAll = sh.select(col("doc_id"), explode(col("sh")).as("s"))
+      val ex =
+        if (cap <= 0) exAll
+        else {
+          val rare = exAll.groupBy("s").agg(count(lit(1)).as("df"))
+            .filter(col("df") <= cap).select("s")
+          exAll.join(rare, "s")
+        }
+      val inter = ex.as("a").join(ex.as("b"),
+          col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
+        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        .agg(count(lit(1)).as("n_shared"))
+      val sz = sh.select(col("doc_id"), size(col("sh")).cast("long").as("n"))
       inter
         .join(sz.as("x"), col("doc_a") === col("x.doc_id"))
         .join(sz.as("y"), col("doc_b") === col("y.doc_id"))
@@ -695,8 +686,8 @@ object Dedup {
           "least(x.n, y.n) AS n_small",
           "(n_shared * 1000000) div least(x.n, y.n) AS containment_micro")
         .filter(col("containment_micro") >= ContainmentMicro)
-        .orderBy("doc_a", "doc_b"))(sh.unpersist(false))
-  }
+        .orderBy("doc_a", "doc_b")
+    }
 
   val SubKLen = 25
   val SubStride = 10

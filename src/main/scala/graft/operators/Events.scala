@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GateUtil._
 import graft.Tables
 import graft.functions.TextFns.{hash56, hash56Sql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -293,7 +294,7 @@ object Events {
     * events) plus the two-pass broadcast-offset prefix sum, so every
     * partition sweeps in parallel; no single-partition window anywhere.
     * Peak and first-attainment collapse in ONE max(struct) aggregate. */
-  def peakConcurrency(spark: SparkSession, dir: String): DataFrame = {
+  def peakConcurrency(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val byUser = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
     val sess = Tables.events(spark, dir)
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"))
@@ -305,7 +306,7 @@ object Events {
         byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .groupBy("user_id", "session_id")
       .agg(min("us").as("s0"), max("us").as("s1"))
-      .localCheckpoint(true) // feeds the sweep AND the census
+      .checkpointed // feeds the sweep AND the census
     val sweep = ScaleWindows.withGlobalRunningSum(
       sess.selectExpr("s0 AS us", "CAST(1 AS BIGINT) AS delta")
         .unionAll(sess.selectExpr("s1 AS us", "CAST(-1 AS BIGINT) AS delta")),
@@ -623,7 +624,7 @@ object Events {
     * Scale: the sessionizer's one user exchange + a session-grain
     * rollup + the bounded-fan-out pair join; the census is ≤ |types|²
     * rows at any corpus size. */
-  def seqPatterns(spark: SparkSession, dir: String): DataFrame = {
+  def seqPatterns(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val byUser = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
     val sess = Tables.events(spark, dir)
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
@@ -636,7 +637,7 @@ object Events {
       .groupBy("user_id", "session_id", "event_type")
       .agg(min(unix_micros(col("ts"))).as("first_us"),
         max(unix_micros(col("ts"))).as("last_us"))
-      .localCheckpoint() // feeds both pair sides and the session total
+      .checkpointed // feeds both pair sides and the session total
     val nSessions = sess.select("user_id", "session_id").distinct().count()
     val a = sess.selectExpr("user_id", "session_id",
       "event_type AS a", "first_us")
@@ -670,7 +671,7 @@ object Events {
     * |types| rows (type-domain bounded — the KM driver-fold class), so
     * the driver recurrence is O(K·|types|²) at ANY corpus size; the
     * corpus-scan cost is exactly the sessionizer's. */
-  def removalEffect(spark: SparkSession, dir: String): DataFrame = {
+  def removalEffect(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val spark2 = spark
     import spark2.implicits._
     val byUser = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
@@ -685,7 +686,7 @@ object Events {
         byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .withColumn("to_type", lead("event_type", 1).over(byUser))
       .withColumn("to_session", lead("session_id", 1).over(byUser))
-      .localCheckpoint() // one sessionizer pass feeds matrix and starts
+      .checkpointed // one sessionizer pass feeds matrix and starts
     // bounded collects: ≤ |types|² cells and ≤ |types| start rows
     val cells = e.filter(col("to_session") === col("session_id"))
       .groupBy(col("event_type").as("f"), col("to_type").as("t"))

@@ -1,10 +1,10 @@
 package graft.operators
 
 import graft.Tables
+import graft.GateUtil.{Scope, pinned}
 import graft.functions.TextFns.{hash56, hash56Sql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Graph analytics over the order graph (suppliers ↔ customers linked
   * by lineitem⋈orders). Connected components live in Components.scala
@@ -47,55 +47,29 @@ object Graph {
         col("o_custkey").cast("long").as("c"))
       .distinct()
 
+  /** Both directions of every (s, c) pair, customers offset into their
+    * own node-id range. */
+  private def bothWays(e: DataFrame): DataFrame =
+    e.select(col("s").as("src"), (col("c") + CustOffset).as("dst"))
+      .union(e.select((col("c") + CustOffset).as("src"), col("s").as("dst")))
+
   def pageRank(spark: SparkSession, dir: String): DataFrame =
-    pageRankPairs(scPairs(spark, dir), topK = 20)
+    pinned { implicit s => pageRankPairs(scPairs(spark, dir), topK = 20) }
 
   /** Core over any distinct bipartite (s, c) pair frame; see [[pageRank]].
     * `iters` exists for the per-pass cost probe (tools.GraphProbe) —
     * gates always run the default [[PrIters]]. */
   private[graft] def pageRankPairs(e: DataFrame, topK: Int,
-      iters: Int = PrIters): DataFrame = {
-    val edges = e.select(col("s").as("src"), (col("c") + CustOffset).as("dst"))
-      .union(e.select((col("c") + CustOffset).as("src"), col("s").as("dst")))
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-    val nNodes = deg.count() // one narrow job, and the regime evidence
-    // r16 (guide §2.4/§3.1): two regimes from the MEASURED node count.
-    // Small-node regime (the shipped gates: nodes = suppliers+customers,
-    // dim-grain): edges cached pre-partitioned on the AGGREGATION key
-    // dst; each pass broadcast-joins the node-sized rank table
-    // (checkpointed so the broadcast builds from a materialized leaf,
-    // not a replay of prior passes) and the contribution rollup runs
-    // inside the existing hash(dst) layout — zero edge-grain exchanges
-    // per pass. Large-node regime: the r15 shape verbatim (edges
-    // partitioned on the JOIN key src; ranks + partial-agg contribs
-    // shuffle each pass).
-    val small = nNodes <= GraphBroadcastMaxNodes
-    val edgesD = edges.join(deg, "src")
-      .repartition(if (small) col("dst") else col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val base = (PrScale * 15L / 100L) / nNodes
-    var ranks = deg.select(col("src").as("node"), lit(PrScale / nNodes).as("r"))
-    for (_ <- 1 to iters) {
-      val r = if (small) broadcast(ranks.localCheckpoint(true)) else ranks
-      ranks = edgesD.join(r, col("src") === col("node"))
-        .selectExpr("dst", "((r * 85) DIV 100) DIV d AS contrib")
-        .groupBy("dst").agg(sum("contrib").as("rc"))
-        .select(col("dst").as("node"), (col("rc") + lit(base)).as("r"))
-    }
-    // truncate lineage + materialize the (small) final ranks while the
-    // edge cache is alive, then release it — no cross-query cache leak
-    val finalRanks = ranks.localCheckpoint(true)
-    edgesD.unpersist(false)
-    finalRanks
+      iters: Int = PrIters)(implicit s: Scope): DataFrame =
+    pageRankNodes(e.select(col("s").as("a"), (col("c") + CustOffset).as("b")), iters)
       .select(
         when(col("node") >= CustOffset, lit("cust")).otherwise(lit("supp"))
           .as("node_type"),
         when(col("node") >= CustOffset, col("node") - CustOffset)
           .otherwise(col("node")).as("node_id"),
-        col("r").as("rank_units"))
+        col("rank_units"))
       .orderBy(col("rank_units").desc, col("node_type"), col("node_id"))
       .limit(topK)
-  }
 
   val PprSeedMod = 17L
 
@@ -112,18 +86,15 @@ object Graph {
     * Scale: identical posture to pageRank — edges partitioned once and
     * cached, per-pass shuffle is (nonzero-)ranks-only. */
   def personalizedPageRank(spark: SparkSession, dir: String): DataFrame =
-    pprPairs(scPairs(spark, dir), topK = 20)
+    pinned { implicit s => pprPairs(scPairs(spark, dir), topK = 20) }
 
   /** Core over any distinct bipartite (s, c) pair frame. */
-  private[graft] def pprPairs(e: DataFrame, topK: Int): DataFrame = {
-    val edges = e.select(col("s").as("src"), (col("c") + CustOffset).as("dst"))
-      .union(e.select((col("c") + CustOffset).as("src"), col("s").as("dst")))
+  private[graft] def pprPairs(e: DataFrame, topK: Int)(implicit s: Scope): DataFrame = {
+    val edges = bothWays(e)
     val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-    val edgesD = edges.join(deg, "src")
-      .repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-    val seeds = e.select(col("s").cast("long").as("node")).distinct()
-      .filter(col("node") % PprSeedMod === 0)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edgesD = s.persist(edges.join(deg, "src").repartition(col("src")))
+    val seeds = s.persist(e.select(col("s").cast("long").as("node")).distinct()
+      .filter(col("node") % PprSeedMod === 0))
     val nSeeds = seeds.count() // bounded driver action, materializes cache
     val basePpr = (PrScale * 15L / 100L) / nSeeds
     var ranks = seeds.select(col("node"), lit(PrScale / nSeeds).as("r"))
@@ -137,10 +108,7 @@ object Graph {
         .select(coalesce(col("dst"), col("node")).as("node"),
           (coalesce(col("rc"), lit(0L)) + coalesce(col("b"), lit(0L))).as("r"))
     }
-    val finalRanks = ranks.localCheckpoint(true)
-    edgesD.unpersist(false)
-    seeds.unpersist(false)
-    finalRanks
+    ranks
       .select(
         when(col("node") >= CustOffset, lit("cust")).otherwise(lit("supp"))
           .as("node_type"),
@@ -168,7 +136,7 @@ object Graph {
     * broadcast total — the pageRank posture; scores stay sparse on the
     * reachable side only. */
   def hits(spark: SparkSession, dir: String): DataFrame =
-    hitsPairs(scPairs(spark, dir), HitsTopK)
+    pinned { implicit s => hitsPairs(scPairs(spark, dir), HitsTopK) }
 
   /** Core over any distinct directed bipartite (s, c) pair frame.
     *
@@ -179,17 +147,17 @@ object Graph {
     * fixed edge layout (at bench scale AQE broadcasts the ranks and
     * neither side moves); un-partitioned, a non-broadcast plan would
     * re-shuffle the full edge list twice per iteration. Costs 2× edge
-    * cache residency for the duration of the fixpoint — freed before
-    * return. */
-  private[graft] def hitsPairs(e: DataFrame, topK: Int): DataFrame = {
-    val edgesByS = e.repartition(col("s")).persist(StorageLevel.MEMORY_AND_DISK)
-    val edgesByC = e.repartition(col("c")).persist(StorageLevel.MEMORY_AND_DISK)
+    * cache residency for the duration of the fixpoint — freed with the
+    * caller's scope. */
+  private[graft] def hitsPairs(e: DataFrame, topK: Int)(implicit s: Scope): DataFrame = {
+    val edgesByS = s.persist(e.repartition(col("s")))
+    val edgesByC = s.persist(e.repartition(col("c")))
     val nS = edgesByS.select("s").distinct().count()
     def normalize(raw0: DataFrame, key: String, in: String, out: String): DataFrame = {
       // Eager checkpoint: `raw` feeds BOTH the 1-row total and the scores, and
       // each half-pass builds on the previous one — without truncation the
       // plan doubles per half-pass (2^6 recomputes of the base join by iter 3).
-      val raw = raw0.localCheckpoint(true)
+      val raw = s.checkpoint(raw0)
       val tot = raw.agg(sum(in).as("tot"))
       raw.crossJoin(broadcast(tot))
         .select(col(key),
@@ -211,12 +179,8 @@ object Graph {
     val auths = a.orderBy(col("a").desc, col("c")).limit(topK)
       .select(lit("authority").as("role"), col("c").cast("long").as("node_id"),
         col("a").as("score_units"))
-    val out = hubs.union(auths)
+    hubs.union(auths)
       .orderBy(col("role"), col("score_units").desc, col("node_id"))
-      .localCheckpoint(true)
-    edgesByS.unpersist(false)
-    edgesByC.unpersist(false)
-    out
   }
 
   /** Triangle census of the part co-purchase graph (parts sharing an
@@ -240,12 +204,12 @@ object Graph {
       .join(l.select(col("o"), col("p").as("b")), "o")
       .filter(col("a") < col("b"))
       .select(col("a").cast("long"), col("b").cast("long")).distinct()
-    triangleCensusDf(pairs)
+    pinned { implicit s => triangleCensusDf(pairs) }
   }
 
   /** Core over any distinct undirected edge frame with columns (a, b),
     * a < b; see [[triangleCensus]]. */
-  private[graft] def triangleCensusDf(edges0: DataFrame): DataFrame = {
+  private[graft] def triangleCensusDf(edges0: DataFrame)(implicit s: Scope): DataFrame = {
     // r15 optimization (guide §2.4/§5): the edge frame, the degree
     // table and the oriented edge list each feed MULTIPLE consumers
     // (edges → degree census + orientation join; deg → two orientation
@@ -255,22 +219,20 @@ object Graph {
     // (plans/r15/q_triangles_before.txt: a 412-node plan with 8
     // lineitem-scan instances, held together only by runtime exchange
     // reuse — the post-exchange orientation SMJs still executed ~3x).
-    // Three localCheckpoints (edge-/node-/edge-sized — the same
+    // Three checkpoints (edge-/node-/edge-sized — the same
     // block-manager posture as modularity's pairs checkpoint) compute
     // each once; before/after in OPTIMIZATION_r15.md.
-    val edges = edges0.localCheckpoint(true)
-    val deg = edges.select(explode(array(col("a"), col("b"))).as("v"))
-      .groupBy("v").agg(count(lit(1)).as("d"))
-      .localCheckpoint(true)
-    val e = edges
+    val edges = s.checkpoint(edges0)
+    val deg = s.checkpoint(edges.select(explode(array(col("a"), col("b"))).as("v"))
+      .groupBy("v").agg(count(lit(1)).as("d")))
+    val e = s.checkpoint(edges
       .join(deg.select(col("v").as("a"), col("d").as("da")), "a")
       .join(deg.select(col("v").as("b"), col("d").as("db")), "b")
       .select(when(col("da") < col("db") ||
           (col("da") === col("db") && col("a") < col("b")),
           struct(col("a").as("u"), col("b").as("w")))
         .otherwise(struct(col("b").as("u"), col("a").as("w"))).as("e"))
-      .select(col("e.u").as("u"), col("e.w").as("w"))
-      .localCheckpoint(true)
+      .select(col("e.u").as("u"), col("e.w").as("w")))
     // wedges at the oriented apex; pair canonicalized by node id so the
     // closing probe is orientation-insensitive
     val wedges = e.as("x").join(e.as("y"),
@@ -324,14 +286,12 @@ object Graph {
     * the pregel-style posture; the layer census is a log-sized final
     * aggregate. */
   def bfsLayers(spark: SparkSession, dir: String): DataFrame =
-    bfsLayersPairs(scPairs(spark, dir))
+    pinned { implicit s => bfsLayersPairs(scPairs(spark, dir)) }
 
-  private[graft] def bfsLayersPairs(e: DataFrame): DataFrame = {
-    val edges = e.select(col("s").as("src"), (col("c") + CustOffset).as("dst"))
-      .union(e.select((col("c") + CustOffset).as("src"), col("s").as("dst")))
-      .repartition(col("src")) // cached pre-hashed on the per-round join
-      // key — only the frontier side shuffles each hop
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  private[graft] def bfsLayersPairs(e: DataFrame)(implicit s: Scope): DataFrame = {
+    // cached pre-hashed on the per-round join key — only the frontier
+    // side shuffles each hop
+    val edges = s.persist(bothWays(e).repartition(col("src")))
     var dist = edges.select(col("src").as("node")).distinct()
       .filter(col("node") < CustOffset && pmod(col("node"), lit(BfsSeedMod)) === 1)
       .withColumn("dist", lit(0L))
@@ -340,22 +300,32 @@ object Graph {
         .join(dist.filter(col("dist") === (k - 1).toLong),
           col("src") === col("node"))
         .select(col("dst").as("node"), lit(k.toLong).as("dist"))
-      dist = dist.union(next).groupBy("node").agg(min("dist").as("dist"))
-        // r15 optimization: per-hop trim, the ssspPairs/closenessPairs
-        // posture — dist feeds BOTH the frontier filter and the union,
-        // so the un-truncated subtree doubled per hop (2³ replays of
-        // hop 0 by hop 3; only exchange reuse damped it)
-        .localCheckpoint(true)
+      // r15 optimization: per-hop trim, the ssspPairs/closenessPairs
+      // posture — dist feeds BOTH the frontier filter and the union,
+      // so the un-truncated subtree doubled per hop (2³ replays of
+      // hop 0 by hop 3; only exchange reuse damped it)
+      dist = s.checkpoint(dist.union(next).groupBy("node").agg(min("dist").as("dist")))
     }
-    val out = dist.groupBy("dist").agg(count(lit(1)).as("n_nodes"))
-      .orderBy("dist").localCheckpoint(true)
-    edges.unpersist(false)
-    out
+    dist.groupBy("dist").agg(count(lit(1)).as("n_nodes")).orderBy("dist")
   }
 
   val KcoreK = 3
   val KcorePasses = 6
   val KcoreMinW = 2
+
+  /** Part pairs a < b sharing at least [[KcoreMinW]] distinct orders —
+    * the sparsified co-purchase graph the k-core, LPA, modularity and
+    * connected-components gates run on. */
+  private def repeatPairs(spark: SparkSession, dir: String): DataFrame = {
+    val l = Tables.lineitem(spark, dir)
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
+    l.select(col("o"), col("p").as("a"))
+      .join(l.select(col("o"), col("p").as("b")), "o")
+      .filter(col("a") < col("b"))
+      .groupBy(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
+      .agg(count(lit(1)).as("w"))
+      .filter(col("w") >= KcoreMinW).select("a", "b")
+  }
 
   /** Bounded-pass k-core peeling ([[KcoreK]]-core, [[KcorePasses]]
     * synchronous passes) of the REPEAT-co-purchase graph: parts that
@@ -373,17 +343,8 @@ object Graph {
     * peeling round. Pass count is fixed, survivors are checkpointed
     * per pass (iterative-trim posture, same as pageRank), and the
     * driver only ever sees the log-sized census. */
-  def kCore(spark: SparkSession, dir: String): DataFrame = {
-    val l = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val pairs = l.select(col("o"), col("p").as("a"))
-      .join(l.select(col("o"), col("p").as("b")), "o")
-      .filter(col("a") < col("b"))
-      .groupBy(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-      .agg(count(lit(1)).as("w"))
-      .filter(col("w") >= KcoreMinW).select("a", "b")
-    kCorePairs(pairs)
-  }
+  def kCore(spark: SparkSession, dir: String): DataFrame =
+    pinned { implicit s => kCorePairs(repeatPairs(spark, dir)) }
 
   /** Core over any distinct undirected edge frame (a, b); see [[kCore]].
     *
@@ -397,19 +358,11 @@ object Graph {
     * n_nodes = its row count, n_edges = sum(d) DIV 2 (every edge
     * contributes 2 to the degree sum) — integer-identical, including
     * the empty frame (coalesce pins null→0 exactly like count(1) DIV 2).
-    * Edge-frame checkpoint blocks are freed one pass behind (the
-    * Components ckpt posture): censuses reference only the node-sized
-    * degree checkpoints, so peak edge-block residency is 2 frames
-    * regardless of pass count. */
-  private[graft] def kCorePairs(edges0: DataFrame): DataFrame = {
-    val sc = edges0.sparkSession.sparkContext
-    def ckpt(df: DataFrame): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint(true)
-      val added = sc.getPersistentRDDs
-        .collect { case (id, r) if !before(id) => r }.toSeq
-      (out, added)
-    }
+    * Edge-frame checkpoints are freed through the scope one pass behind
+    * (the dfjump posture): censuses reference only the node-sized degree
+    * checkpoints, so peak edge-block residency is 2 frames regardless
+    * of pass count. */
+  private[graft] def kCorePairs(edges0: DataFrame)(implicit s: Scope): DataFrame = {
     def degreesOf(e: DataFrame): DataFrame =
       e.select(explode(array(col("a"), col("b"))).as("v"))
         .groupBy("v").agg(count(lit(1)).as("d"))
@@ -417,8 +370,8 @@ object Graph {
       deg.agg(count(lit(1)).as("n_nodes"),
         expr("coalesce(sum(d), 0) DIV 2").as("n_edges"))
         .select(lit(pass).as("pass"), col("n_nodes"), col("n_edges"))
-    var (cur, curBlocks) = ckpt(edges0)
-    var deg = degreesOf(cur).localCheckpoint(true)
+    var cur = s.checkpoint(edges0)
+    var deg = s.checkpoint(degreesOf(cur))
     val traces = Seq.newBuilder[DataFrame]
     traces += censusOf(deg, 0)
     for (p <- 1 to KcorePasses) {
@@ -430,15 +383,15 @@ object Graph {
       // shuffles re-run for the lazy census cost more than the saved
       // edge-frame writes at every scale where the edge set still fits
       // the block manager; keep one checkpoint per peel.
-      val (next, nextBlocks) = ckpt(cur
+      val next = s.checkpoint(cur
         .join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
         .select("a", "b"))
       // the previous edge frame is referenced by nothing anymore (the
       // censuses read the degree checkpoints) — free its blocks now
-      curBlocks.foreach(_.unpersist(false))
-      cur = next; curBlocks = nextBlocks
-      deg = degreesOf(cur).localCheckpoint(true)
+      s.free(cur)
+      cur = next
+      deg = s.checkpoint(degreesOf(cur))
       traces += censusOf(deg, p)
     }
     traces.result().reduce(_ unionAll _).orderBy("pass")
@@ -464,21 +417,12 @@ object Graph {
     * node-sized label table into that fixed layout, the (v, lbl)
     * frequency count partial-aggregates map-side, and the per-node
     * argmax is a per-key top-1 (WindowGroupLimit heaps), never a global
-    * sort. localCheckpoint truncates the 3-pass lineage. */
-  def labelProp(spark: SparkSession, dir: String): DataFrame = {
-    val l = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val pairs = l.select(col("o"), col("p").as("a"))
-      .join(l.select(col("o"), col("p").as("b")), "o")
-      .filter(col("a") < col("b"))
-      .groupBy(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-      .agg(count(lit(1)).as("w"))
-      .filter(col("w") >= KcoreMinW).select("a", "b")
-    labelPropPairs(pairs, topK = 20)
-  }
+    * sort. A checkpoint truncates the 3-pass lineage. */
+  def labelProp(spark: SparkSession, dir: String): DataFrame =
+    pinned { implicit s => labelPropPairs(repeatPairs(spark, dir), topK = 20) }
 
   /** Core over any distinct undirected edge frame (a, b), a < b. */
-  private[graft] def labelPropPairs(e: DataFrame, topK: Int): DataFrame =
+  private[graft] def labelPropPairs(e: DataFrame, topK: Int)(implicit s: Scope): DataFrame =
     lpaLabels(e).groupBy("lbl").agg(count(lit(1)).as("n_members"))
       .orderBy(desc("n_members"), asc("lbl")).limit(topK)
       .select(col("lbl").as("community"), col("n_members"))
@@ -511,8 +455,10 @@ object Graph {
     * shuffled the partially-aggregated (v, lbl) frame (near edge-grain
     * on early passes when neighbor labels haven't converged) plus a
     * node-grain exchange. Large-label regime: the r15 shape, verbatim
-    * — edges partitioned on the JOIN key u, labels shuffle per pass. */
-  private[graft] def lpaLabels(e: DataFrame): DataFrame = {
+    * — edges partitioned on the JOIN key u, labels shuffle per pass;
+    * there the v-layout cache is freed as soon as the u-layout cache is
+    * materialized, so only one edge cache lives through the passes. */
+  private[graft] def lpaLabels(e: DataFrame)(implicit s: Scope): DataFrame = {
     val sym = e.select(col("a").as("v"), col("b").as("u"))
       .union(e.select(col("b").as("v"), col("a").as("u")))
     // cache in the v-layout FIRST, measure the node universe from the
@@ -520,28 +466,28 @@ object Graph {
     // pair-building subtree), and only then pick the regime; the large
     // regime pays one repartition read from this cache, amortized over
     // the per-pass wins it buys
-    val edgesV = sym.repartition(col("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = edgesV.select(col("v").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl"))
-    val small = labels.count() <= GraphBroadcastMaxNodes
-    val edges = if (small) edgesV
-      else edgesV.repartition(col("u")).persist(StorageLevel.MEMORY_AND_DISK)
+    val edgesV = s.persist(sym.repartition(col("v")))
+    val nodes = s.checkpoint(edgesV.select(col("v").as("node")).distinct())
+    var labels = nodes.select(col("node"), col("node").as("lbl"))
+    val small = nodes.count() <= GraphBroadcastMaxNodes
+    val edges = if (small) edgesV else {
+      val edgesU = s.persist(edgesV.repartition(col("u")))
+      edgesU.count()
+      s.free(edgesV)
+      edgesU
+    }
     for (_ <- 1 to LpaIters) {
       // per-node argmax as a struct-max AGGREGATION, not a window: both
       // grouping stages partial-aggregate map-side and neither sorts.
       // max(struct(c, -lbl)) = lexicographic (count desc, label asc) —
       // exactly the pinned tie-break
-      val lbl = if (small) broadcast(labels.localCheckpoint(true)) else labels
+      val lbl = if (small) broadcast(s.checkpoint(labels)) else labels
       labels = edges.join(lbl, col("u") === col("node"))
         .groupBy("v", "lbl").agg(count(lit(1)).as("c"))
         .groupBy("v").agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
         .select(col("v").as("node"), (-col("m.nl")).as("lbl"))
     }
-    val fin = labels.localCheckpoint(true)
-    edgesV.unpersist(false)
-    if (!small) edges.unpersist(false)
-    fin
+    s.checkpoint(labels)
   }
 
   /** Modularity of the LPA communities — the SCORE the label-prop gate
@@ -556,16 +502,8 @@ object Graph {
     * Scale: two label joins onto the once-partitioned edge list
     * (intra-edge census + degree census) and a community-grain rollup —
     * nothing beyond the LPA passes themselves. */
-  def modularity(spark: SparkSession, dir: String): DataFrame = {
-    val l = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val pairs = l.select(col("o"), col("p").as("a"))
-      .join(l.select(col("o"), col("p").as("b")), "o")
-      .filter(col("a") < col("b"))
-      .groupBy(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-      .agg(count(lit(1)).as("w"))
-      .filter(col("w") >= KcoreMinW).select("a", "b")
-      .localCheckpoint() // feeds labels, intra census, and degrees
+  def modularity(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
+    val pairs = s.checkpoint(repeatPairs(spark, dir)) // feeds labels, intra census, and degrees
     val labels = lpaLabels(pairs)
     val m = pairs.count()
     val intra = pairs
@@ -608,54 +546,50 @@ object Graph {
     * that DBSCAN's merge and duplicate-cluster resolution already ride;
     * the oracle is the same recursive-CTE min-label propagation run to
     * fixpoint, so the component labels (min node id) match exactly. */
-  def connectedComponents(spark: SparkSession, dir: String): DataFrame = {
-    val l = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val pairs = l.select(col("o"), col("p").as("a"))
-      .join(l.select(col("o"), col("p").as("b")), "o")
-      .filter(col("a") < col("b"))
-      .groupBy(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-      .agg(count(lit(1)).as("w"))
-      .filter(col("w") >= KcoreMinW).select("a", "b")
-    val comp = Components.connected(pairs)
-    graft.GateUtil.pinned(
-      comp.groupBy("comp").agg(count(lit(1)).as("csize"))
-        .groupBy("csize")
-        .agg(count(lit(1)).as("n_components"),
-          (col("csize") * count(lit(1))).as("n_nodes"),
-          sum("comp").as("sum_labels"))
-        .orderBy("csize"))(comp.unpersist(false))
+  def connectedComponents(spark: SparkSession, dir: String): DataFrame = pinned { s =>
+    s.own(Components.connected(repeatPairs(spark, dir)))
+      .groupBy("comp").agg(count(lit(1)).as("csize"))
+      .groupBy("csize")
+      .agg(count(lit(1)).as("n_components"),
+        (col("csize") * count(lit(1))).as("n_nodes"),
+        sum("comp").as("sum_labels"))
+      .orderBy("csize")
   }
 
   /** Generic UNIPARTITE integer PageRank over a distinct undirected
-    * (a, b) edge frame — the same 10⁻¹²-unit recurrence as
-    * [[pageRankPairs]] without the bipartite node offsetting; returns
-    * the full (node, rank_units) table (nodes-sized — callers bound the
-    * node universe, e.g. a df-capped vocabulary). */
-  private[graft] def pageRankNodes(e: DataFrame): DataFrame = {
+    * (a, b) edge frame ([[PrIters]] passes unless `iters` says
+    * otherwise); returns the full (node, rank_units) table (nodes-sized
+    * — callers bound the node universe, e.g. a df-capped vocabulary, or
+    * keep a top-k as [[pageRankPairs]] does). */
+  private[graft] def pageRankNodes(e: DataFrame, iters: Int = PrIters)
+      (implicit s: Scope): DataFrame = {
     val edges = e.select(col("a").as("src"), col("b").as("dst"))
       .union(e.select(col("b").as("src"), col("a").as("dst")))
     val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-    val nNodes = deg.count()
-    // same two-regime pick as pageRankPairs (r16, guide §2.4/§3.1):
-    // dst-layout + per-pass broadcast ranks when the node universe is
-    // measured small (callers bound it, e.g. a df-capped vocabulary)
+    val nNodes = deg.count() // one narrow job, and the regime evidence
+    // r16 (guide §2.4/§3.1): two regimes from the MEASURED node count.
+    // Small-node regime (the shipped gates: nodes = suppliers+customers,
+    // dim-grain): edges cached pre-partitioned on the AGGREGATION key
+    // dst; each pass broadcast-joins the node-sized rank table
+    // (checkpointed so the broadcast builds from a materialized leaf,
+    // not a replay of prior passes) and the contribution rollup runs
+    // inside the existing hash(dst) layout — zero edge-grain exchanges
+    // per pass. Large-node regime: the r15 shape verbatim (edges
+    // partitioned on the JOIN key src; ranks + partial-agg contribs
+    // shuffle each pass).
     val small = nNodes <= GraphBroadcastMaxNodes
-    val edgesD = edges.join(deg, "src")
-      .repartition(if (small) col("dst") else col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edgesD = s.persist(edges.join(deg, "src")
+      .repartition(if (small) col("dst") else col("src")))
     val base = (PrScale * 15L / 100L) / nNodes
     var ranks = deg.select(col("src").as("node"), lit(PrScale / nNodes).as("r"))
-    for (_ <- 1 to PrIters) {
-      val r = if (small) broadcast(ranks.localCheckpoint(true)) else ranks
+    for (_ <- 1 to iters) {
+      val r = if (small) broadcast(s.checkpoint(ranks)) else ranks
       ranks = edgesD.join(r, col("src") === col("node"))
         .selectExpr("dst", "((r * 85) DIV 100) DIV d AS contrib")
         .groupBy("dst").agg(sum("contrib").as("rc"))
         .select(col("dst").as("node"), (col("rc") + lit(base)).as("r"))
     }
-    val fin = ranks.localCheckpoint(true)
-    edgesD.unpersist(false)
-    fin.select(col("node"), col("r").as("rank_units"))
+    s.checkpoint(ranks).select(col("node"), col("r").as("rank_units"))
   }
 
   val LinkPredMaxDeg = 64L
@@ -677,10 +611,10 @@ object Graph {
     * pairs and near-zero signal). The pair aggregate partial-combines
     * map-side; the driver sees only top-k. */
   def linkPredict(spark: SparkSession, dir: String): DataFrame =
-    linkPredictPairs(scPairs(spark, dir), LinkPredTopK)
+    pinned { implicit s => linkPredictPairs(scPairs(spark, dir), LinkPredTopK) }
 
   /** Core over any distinct bipartite (s, c) pair frame. */
-  private[graft] def linkPredictPairs(e0: DataFrame, topK: Int): DataFrame = {
+  private[graft] def linkPredictPairs(e0: DataFrame, topK: Int)(implicit s: Scope): DataFrame = {
     val keepC = e0.groupBy("c").agg(count(lit(1)).as("cd"))
       .filter(col("cd") <= LinkPredMaxDeg).select("c")
     // r16 (guide §2.4): cache pre-partitioned on the self-join key c —
@@ -688,24 +622,19 @@ object Graph {
     // an unpartitioned cache paid an edge-grain exchange (plus SMJ
     // sorts) inside the join; hash(c) on the cached layout makes both
     // self-join sides read in place
-    val e = e0.join(keepC, Seq("c"), "left_semi")
-      .repartition(col("c"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = s.persist(e0.join(keepC, Seq("c"), "left_semi").repartition(col("c")))
     val deg = e.groupBy("s").agg(count(lit(1)).as("d"))
     val common = e.select(col("c"), col("s").as("a"))
       .join(e.select(col("c"), col("s").as("b")), "c")
       .filter(col("a") < col("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("common"))
-    val out = common
+    common
       .join(deg.select(col("s").as("a"), col("d").as("da")), "a")
       .join(deg.select(col("s").as("b"), col("d").as("db")), "b")
       .select(col("a"), col("b"), col("common"),
         expr("common * 1000000 DIV (da + db - common)").as("jaccard_ppm"))
       .orderBy(desc("common"), desc("jaccard_ppm"), asc("a"), asc("b"))
       .limit(topK)
-      .localCheckpoint(true)
-    e.unpersist(false)
-    out
   }
 
   val SsspPasses = 4
@@ -731,24 +660,24 @@ object Graph {
       .groupBy(col("l_suppkey").cast("long").as("s"),
         col("o_custkey").cast("long").as("c"))
       .agg(min("cents").as("w"))
-    ssspPairs(w, SsspTopK)
+    pinned { implicit s => ssspPairs(w, SsspTopK) }
   }
 
   /** Core over a weighted bipartite (s, c, w) frame. */
-  private[graft] def ssspPairs(wp: DataFrame, topK: Int): DataFrame = {
-    val edges = wp.select(col("s").as("src"), (col("c") + CustOffset).as("dst"), col("w"))
+  private[graft] def ssspPairs(wp: DataFrame, topK: Int)(implicit s: Scope): DataFrame = {
+    val edges = s.persist(wp.select(col("s").as("src"), (col("c") + CustOffset).as("dst"), col("w"))
       .union(wp.select((col("c") + CustOffset).as("src"), col("s").as("dst"), col("w")))
-      .repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("src")))
     val src0 = wp.agg(min("s")).head().getLong(0)
     var dist = edges.sparkSession.range(1)
       .select(lit(src0).as("node"), lit(0L).as("dist"))
     for (_ <- 1 to SsspPasses) {
       val relaxed = edges.join(dist, col("src") === col("node"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      dist = dist.union(relaxed).groupBy("node").agg(min("dist").as("dist"))
-        .localCheckpoint(true) // linear-lineage trim, one small table per round
+      // linear-lineage trim, one small table per round
+      dist = s.checkpoint(dist.union(relaxed).groupBy("node").agg(min("dist").as("dist")))
     }
-    val out = dist
+    dist
       .select(
         when(col("node") >= CustOffset, lit("cust")).otherwise(lit("supp"))
           .as("node_type"),
@@ -757,9 +686,6 @@ object Graph {
         col("dist").as("dist_cents"))
       .orderBy(asc("dist_cents"), asc("node_type"), asc("node_id"))
       .limit(topK)
-      .localCheckpoint(true)
-    edges.unpersist(false)
-    out
   }
 
   val CloseSeeds = 8
@@ -780,15 +706,13 @@ object Graph {
     * set — the pregel posture of [[bfsLayersPairs]] with a seed label
     * riding along; the panel bounds every frontier at k·|nodes|. */
   def closeness(spark: SparkSession, dir: String): DataFrame =
-    closenessPairs(scPairs(spark, dir))
+    pinned { implicit s => closenessPairs(scPairs(spark, dir)) }
 
-  private[graft] def closenessPairs(e: DataFrame): DataFrame = {
-    val edges = e.select(col("s").as("src"), (col("c") + CustOffset).as("dst"))
-      .union(e.select((col("c") + CustOffset).as("src"), col("s").as("dst")))
-      .repartition(col("src")) // pre-hash on the per-round join key: the
-      // cached layout satisfies every frontier join's distribution, so
-      // only the (small) frontier side shuffles each round
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  private[graft] def closenessPairs(e: DataFrame)(implicit s: Scope): DataFrame = {
+    // pre-hash on the per-round join key: the cached layout satisfies
+    // every frontier join's distribution, so only the (small) frontier
+    // side shuffles each round
+    val edges = s.persist(bothWays(e).repartition(col("src")))
     val seeds = edges.select(col("src").as("node")).distinct()
       .filter(col("node") < CustOffset && pmod(col("node"), lit(BfsSeedMod)) === 1)
       .orderBy("node").limit(CloseSeeds) // TakeOrdered — a k-row panel
@@ -798,19 +722,15 @@ object Graph {
       val next = edges
         .join(dist.filter(col("dist") === (k - 1).toLong), col("src") === col("node"))
         .select(col("seed"), col("dst").as("node"), lit(k.toLong).as("dist"))
-      dist = dist.union(next)
-        .groupBy("seed", "node").agg(min("dist").as("dist"))
-        .localCheckpoint(true) // linear-lineage trim per round
+      dist = s.checkpoint(dist.union(next) // linear-lineage trim per round
+        .groupBy("seed", "node").agg(min("dist").as("dist")))
     }
-    val out = dist.groupBy("seed")
+    dist.groupBy("seed")
       .agg(count(lit(1)).as("n_reached"),
         sum(when(col("dist") >= 1L, expr("1000000 DIV dist")).otherwise(0L))
           .as("harmonic_micro"),
         sum("dist").as("sum_dist"))
       .orderBy("seed")
-      .localCheckpoint(true)
-    edges.unpersist(false)
-    out
   }
 
   /** Categorical (nation) assortativity of the trade graph — Newman's
@@ -885,7 +805,7 @@ object Graph {
     * the measured-faster one-join-per-hop whole-row layout (the
     * scale-adaptive pattern Components uses for union-find vs GraphX). */
   def randomWalks(spark: SparkSession, dir: String): DataFrame =
-    randomWalksPairs(scPairs(spark, dir))
+    pinned { implicit s => randomWalksPairs(scPairs(spark, dir)) }
 
   /** Max neighbors in one adjacency row. Degrees above this split into
     * ⌈d/segLen⌉ (node, seg) rows; below it the layout degenerates to
@@ -897,23 +817,21 @@ object Graph {
   val RwSegLen = 65536L
 
   /** The pre-aggregate walk frontier: (final-hop walks, cached frames —
-    * the per-node degree table and the segment-split CSR adjacency).
-    * Exposed so PlanAssert-style specs can pin the claim that each hop
-    * shuffles ONLY the frontier — the caller owns unpersisting the
-    * returned caches. */
-  private[graft] def walkFrontier(e: DataFrame): (DataFrame, Seq[DataFrame]) =
+    * the edge list, then the per-node degree table and the segment-split
+    * CSR adjacency), all held by the caller's scope. Exposed so
+    * PlanAssert-style specs can pin the claim that each hop shuffles
+    * ONLY the frontier. */
+  private[graft] def walkFrontier(e: DataFrame)(implicit s: Scope): (DataFrame, Seq[DataFrame]) =
     walkFrontier(e, RwSegLen)
 
   private[graft] def walkFrontier(e: DataFrame, segLen: Long)
-      : (DataFrame, Seq[DataFrame]) = {
+      (implicit s: Scope): (DataFrame, Seq[DataFrame]) = {
     require(segLen > 0, s"segLen must be positive, got $segLen")
     // the edge frame is CACHED before the probe: the probe and the
     // adjacency build each need one pass, and without the cache the
     // probe would re-derive the upstream pair join (measured 4.1/18.2 s
     // vs 3.2/6.3 uncached-probe vs cached below)
-    val edges = e.select(col("s").as("src"), (col("c") + CustOffset).as("dst"))
-      .union(e.select((col("c") + CustOffset).as("src"), col("s").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = s.persist(bothWays(e))
     // scale-adaptive layout (the Components union-find/GraphX pattern):
     // one cheap max-degree probe (partial-aggregated scalar over the
     // cached edges) decides whether any row would exceed segLen.
@@ -934,10 +852,10 @@ object Graph {
     * one frontier join per hop (every row ≤ segLen by the caller's
     * max-degree probe). */
   private def walkFrontierWhole(edges: DataFrame)
-      : (DataFrame, Seq[DataFrame]) = {
-    val adj = edges.groupBy("src")
+      (implicit s: Scope): (DataFrame, Seq[DataFrame]) = {
+    val adj = s.persist(edges.groupBy("src")
       .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
-      .repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("src")))
     var walks = adj.select(col("src"),
         explode(sequence(lit(0L), lit(RwWalksPerNode - 1L))).as("k"))
       .select((col("src") * RwWalksPerNode + col("k")).as("walk_id"),
@@ -957,22 +875,21 @@ object Graph {
     * (node, seg) rows of ≤ segLen entries; each hop resolves the pick
     * in two bounded equi-joins. */
   private def walkFrontierSegmented(edges: DataFrame, segLen: Long)
-      : (DataFrame, Seq[DataFrame]) = {
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-      .repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
+      (implicit s: Scope): (DataFrame, Seq[DataFrame]) = {
+    val deg = s.persist(edges.groupBy("src").agg(count(lit(1)).as("d"))
+      .repartition(col("src")))
     // each neighbor's global position in its node's dst-sorted list via a
     // sort-based window — a hub's partition external-sorts on disk, never
     // a giant in-memory array; each (node, seg) row then holds ≤ segLen
     // neighbors (within a segment, dst order ≡ position order)
     val byPos = org.apache.spark.sql.expressions.Window
       .partitionBy("src").orderBy("dst")
-    val segs = edges
+    val segs = s.persist(edges
       .withColumn("pos", (row_number().over(byPos) - 1).cast("long"))
       .withColumn("seg", expr(s"pos div $segLen"))
       .groupBy("src", "seg")
       .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
-      .repartition(col("src"), col("seg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("src"), col("seg")))
     var walks = deg.select(col("src"),
         explode(sequence(lit(0L), lit(RwWalksPerNode - 1L))).as("k"))
       .select((col("src") * RwWalksPerNode + col("k")).as("walk_id"),
@@ -997,9 +914,8 @@ object Graph {
   }
 
   /** Core over any distinct bipartite (s, c) pair frame. */
-  private[graft] def randomWalksPairs(e: DataFrame): DataFrame = {
-    val (walks, caches) = walkFrontier(e)
-    val out = walks
+  private[graft] def randomWalksPairs(e: DataFrame)(implicit s: Scope): DataFrame =
+    walkFrontier(e)._1
       .withColumn("node_type",
         when(col("walk_id") >= CustOffset * RwWalksPerNode, lit("cust"))
           .otherwise(lit("supp")))
@@ -1009,10 +925,6 @@ object Graph {
         sum(hash56(col("path")).cast("decimal(38,0)")).cast("string")
           .as("path_hash_sum"))
       .orderBy("node_type")
-      .localCheckpoint(true)
-    caches.foreach(_.unpersist(false))
-    out
-  }
 
   val SgWindow = 2
   val SgTopK = 30
@@ -1028,10 +940,10 @@ object Graph {
     * TakeOrderedAndProject, so the driver never sees more than k rows
     * at any corpus size. */
   def walkSkipgrams(spark: SparkSession, dir: String): DataFrame =
-    walkSkipgramsPairs(scPairs(spark, dir))
+    pinned { implicit s => walkSkipgramsPairs(scPairs(spark, dir)) }
 
-  private[graft] def walkSkipgramsPairs(e: DataFrame): DataFrame = {
-    val (walks, caches) = walkFrontier(e)
+  private[graft] def walkSkipgramsPairs(e: DataFrame)(implicit s: Scope): DataFrame = {
+    val (walks, _) = walkFrontier(e)
     val offs = (-SgWindow to SgWindow).filter(_ != 0)
     val pairs = walks
       .select(split(col("path"), "-").as("p"))
@@ -1042,13 +954,10 @@ object Graph {
       .select(col("center").cast("long").as("center"),
         element_at(col("p"), (col("i") + col("off")).cast("int")).cast("long")
           .as("context"))
-    val out = pairs.groupBy("center", "context")
+    pairs.groupBy("center", "context")
       .agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("center"), col("context"))
       .limit(SgTopK)
-      .localCheckpoint(true)
-    caches.foreach(_.unpersist(false))
-    out
   }
 
   val queries: Map[String, Q] = Map(

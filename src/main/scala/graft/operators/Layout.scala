@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GateUtil._
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -104,7 +105,7 @@ object Layout {
     * rows shuffle once (9× replication of one side, the textbook
     * constant), never the O(n²) cross product the oracle uses; density
     * per cell, not corpus size, bounds the per-key work. */
-  def spatialJoin(spark: SparkSession, dir: String): DataFrame = {
+  def spatialJoin(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     import graft.functions.TextFns.hash56
     val pts = Tables.customer(spark, dir).select(
       col("c_custkey").cast("long").as("id"),
@@ -116,7 +117,7 @@ object Layout {
   }
 
   /** Core over any (id, x, y) integer point frame. */
-  def spatialJoinDf(pts: DataFrame, r: Long, topK: Int): DataFrame = {
+  def spatialJoinDf(pts: DataFrame, r: Long, topK: Int)(implicit s: Scope): DataFrame = {
     val spark = pts.sparkSession
     val base = pts.select(col("id"), col("x"), col("y"),
       expr(s"x DIV $r").as("cx"), expr(s"y DIV $r").as("cy"))
@@ -135,7 +136,7 @@ object Layout {
         ((col("x") - col("xb")) * (col("x") - col("xb")) +
           (col("y") - col("yb")) * (col("y") - col("yb"))).as("dist2"))
       .filter(col("dist2") <= r * r)
-      .localCheckpoint(true) // pairs feed both the count and the top-k
+      .checkpointed // pairs feed both the count and the top-k
     val tot = pairs.agg(count(lit(1)).as("n_pairs"))
     pairs.crossJoin(broadcast(tot))
       .orderBy(asc("dist2"), asc("a"), asc("b"))
@@ -154,7 +155,7 @@ object Layout {
     *
     * Scale: identical posture to the spatial join — cells bound the
     * candidate fan-out; the per-point min is a partial+final agg. */
-  def nnDistance(spark: SparkSession, dir: String): DataFrame = {
+  def nnDistance(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     import graft.functions.TextFns.hash56
     val pts = Tables.customer(spark, dir).select(
       col("c_custkey").cast("long").as("id"),
@@ -166,8 +167,8 @@ object Layout {
   }
 
   /** Core over any (id, x, y) integer point frame. */
-  def nnDistanceDf(pts0: DataFrame, r: Long): DataFrame = {
-    val pts = pts0.localCheckpoint(true) // feeds base, repl, and the census
+  def nnDistanceDf(pts0: DataFrame, r: Long)(implicit s: Scope): DataFrame = {
+    val pts = pts0.checkpointed // feeds base, repl, and the census
     val spark = pts.sparkSession
     val base = pts.select(col("id"), col("x"), col("y"),
       expr(s"x DIV $r").as("cx"), expr(s"y DIV $r").as("cy"))

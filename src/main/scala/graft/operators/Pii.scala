@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GateUtil._
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -68,13 +69,13 @@ object Pii {
     * Scale: one (QI, sens) rollup bounded by |QI classes|·|segments|,
     * a |segments|-row broadcast, a 1-row total broadcast, and a
     * classes×segments grid — never anything row-sized. */
-  def tCloseness(spark: SparkSession, dir: String): DataFrame = {
+  def tCloseness(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val cells = Tables.customer(spark, dir).selectExpr(
         "c_nationkey AS qi1",
         "CAST(round(c_acctbal * 100) AS BIGINT) DIV 100000 AS qi2",
         "c_mktsegment AS sens")
       .groupBy("qi1", "qi2", "sens").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // feeds the grid, globals, and class sizes
+      .checkpointed // feeds the grid, globals, and class sizes
     val glob = cells.groupBy("sens").agg(sum("c").as("g"))
     val tot = glob.agg(sum("g").as("nn"))
     val classes = cells.groupBy("qi1", "qi2").agg(sum("c").as("n"))

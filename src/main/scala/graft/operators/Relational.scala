@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GateUtil._
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -978,7 +979,7 @@ object Relational {
     * window funneling the customer grain through 2 sort partitions.
     * Then a full-outer self-align on the customer key and a ≤25-row
     * census. */
-  def valueMigration(spark: SparkSession, dir: String): DataFrame = {
+  def valueMigration(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val o = Tables.orders(spark, dir).select(
       col("o_custkey").as("ck"), to_date(col("o_orderdate")).as("d"),
       expr("CAST(round(o_totalprice * 100) AS LONG)").as("cents"))
@@ -991,14 +992,14 @@ object Relational {
     // ntile(4) arithmetic from (rank, n): the first n%4 buckets carry
     // n DIV 4 + 1 rows, the rest n DIV 4 — exactly SQL ntile's deal
     val q = ScaleWindows.withBoundedGroupRank(
-        halves.localCheckpoint(true), "h", Seq(col("v"), col("ck")), "rk", "n")
+        halves.checkpointed, "h", Seq(col("v"), col("ck")), "rk", "n")
       .selectExpr("ck", "h", "rk", "n DIV 4 AS k4", "n % 4 AS r4")
       .selectExpr("ck", "h",
         """CAST(CASE WHEN rk <= r4 * (k4 + 1)
           |  THEN (rk - 1) DIV (k4 + 1) + 1
           |  ELSE r4 + (rk - r4 * (k4 + 1) - 1) DIV k4 + 1 END AS INT)
           |  AS q""".stripMargin)
-      .localCheckpoint(true) // customer-grain; both half filters read it
+      .checkpointed // customer-grain; both half filters read it
     val a = q.filter(col("h") === 0).select(col("ck"), col("q").as("q0"))
     val b = q.filter(col("h") === 1).select(col("ck").as("ckb"), col("q").as("q1"))
     a.join(b, col("ck") === col("ckb"), "full_outer")
@@ -1021,7 +1022,7 @@ object Relational {
     * partitioned sort of the part grain plus the two-pass broadcast-
     * offset prefix sum (no single-partition window) — and a 3-row
     * output. The prefix pass runs over parts, never line items. */
-  def abcClassification(spark: SparkSession, dir: String): DataFrame = {
+  def abcClassification(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val byPart = Tables.lineitem(spark, dir)
       .groupBy(col("l_partkey").as("pk"))
       .agg(sum(expr("CAST(round(l_extendedprice * 100) AS LONG)")).as("cents"))
@@ -1029,9 +1030,9 @@ object Relational {
   }
 
   /** Core over any (pk, cents) item-revenue frame. */
-  private[graft] def abcOf(byPart0: DataFrame): DataFrame = {
+  private[graft] def abcOf(byPart0: DataFrame)(implicit s: Scope): DataFrame = {
     // part-grain table feeds the prefix pass AND the total — one scan
-    val byPart = byPart0.localCheckpoint(true)
+    val byPart = byPart0.checkpointed
     val tot = byPart.agg(sum("cents").as("total"))
     ScaleWindows.withGlobalRunningSum(byPart,
         Seq(desc("cents"), asc("pk")), "cents", "cum")
@@ -1124,21 +1125,22 @@ object Relational {
     * broadcast-offset prefix sum over the unique-`v` table, never a
     * SinglePartition window — then a k-row group frame. The fact table
     * never shuffles twice. */
-  def kruskalWallis(spark: SparkSession, dir: String): DataFrame =
+  def kruskalWallis(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     kruskalWallisDf(Tables.orders(spark, dir)
       .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment").as("grp"),
         expr("CAST(round(o_totalprice * 100) AS LONG)").as("v")))
+  }
 
   /** Core over any (grp, v LONG) frame. */
-  private[graft] def kruskalWallisDf(xs: DataFrame): DataFrame = {
+  private[graft] def kruskalWallisDf(xs: DataFrame)(implicit s: Scope): DataFrame = {
     val byVG = xs.groupBy("v", "grp").agg(count(lit(1)).as("c"))
     val byV = xs.groupBy("v").agg(count(lit(1)).as("t"))
     val ranked = ScaleWindows
       .withGlobalRunningSum(byV, Seq(asc("v")), "t", "cum")
       .selectExpr("v", "2 * (cum - t) + t + 1 AS rank2",
         "CAST(t AS DECIMAL(38,0)) * t * t - t AS tie3")
-      .localCheckpoint(true) // value-grain table feeds groups AND ties
+      .checkpointed // value-grain table feeds groups AND ties
     val groups = byVG.join(ranked.select("v", "rank2"), "v")
       .groupBy("grp")
       .agg(sum("c").as("n_g"),
@@ -1181,7 +1183,7 @@ object Relational {
     * (the ≤5-row bounded group space) — never a row_number window
     * funneling the order grain through |segments| sort partitions —
     * then one partial+final rollup to |segments| rows. */
-  def giniConcentration(spark: SparkSession, dir: String): DataFrame = {
+  def giniConcentration(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val x = Tables.orders(spark, dir)
       .join(Tables.customer(spark, dir),
         col("o_custkey") === col("c_custkey"))
@@ -1192,9 +1194,9 @@ object Relational {
   }
 
   /** Core over any (seg, cents, o_orderkey tie-break) frame. */
-  private[graft] def giniDf(x0: DataFrame): DataFrame = {
+  private[graft] def giniDf(x0: DataFrame)(implicit s: Scope): DataFrame = {
     // order-grain input feeds the rank pass AND the group census
-    val x = x0.localCheckpoint(true)
+    val x = x0.checkpointed
     ScaleWindows.withBoundedGroupRank(x, "seg",
         Seq(col("cents"), col("o_orderkey")), "rk", "__n")
       .groupBy("seg")
@@ -1257,21 +1259,22 @@ object Relational {
     * Scale: the bucket table is bounded (price DIV bucket), so the
     * quadratic range join is over k², not rows²; one fact rollup
     * feeds it. */
-  def isotonicCalibration(spark: SparkSession, dir: String): DataFrame =
+  def isotonicCalibration(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     isotonicOfScores(Tables.orders(spark, dir)
       .selectExpr(
         s"(CAST(round(o_totalprice * 100) AS LONG)) DIV $AucBucketCents AS s",
         "CASE WHEN o_orderpriority = '1-URGENT' THEN 1L ELSE 0L END AS pos"))
+  }
 
   /** Core over any (s LONG bucketed score, pos 0/1 LONG) frame. */
-  private[graft] def isotonicOfScores(scored: DataFrame): DataFrame = {
+  private[graft] def isotonicOfScores(scored: DataFrame)(implicit s: Scope): DataFrame = {
     val b = scored.groupBy("s")
       .agg(count(lit(1)).as("n"), sum("pos").as("p"))
     val w = Window.orderBy("s")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val pre = b.select(col("s"), col("n"), col("p"),
       sum("n").over(w).as("cn"), sum("p").over(w).as("cp"))
-      .localCheckpoint(true) // bounded bucket table feeds a 3-way self-join
+      .checkpointed // bounded bucket table feeds a 3-way self-join
     val lo = pre.select(col("s").as("j"), (col("cn") - col("n")).as("cn0"),
       (col("cp") - col("p")).as("cp0"))
     val hi = pre.select(col("s").as("l"), col("cn").as("cn1"), col("cp").as("cp1"))
@@ -1444,7 +1447,7 @@ object Relational {
     * block key's job; skewed blocks salt exactly like q_salted_join),
     * the pattern rollup partial-aggregates map-side onto ≤2³ rows, and
     * the u-estimation + scoring all happen on that 8-row frame. */
-  def fellegiSunter(spark: SparkSession, dir: String): DataFrame = {
+  def fellegiSunter(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val c = Tables.customer(spark, dir).select(
       col("c_custkey").as("id"), col("c_nationkey").as("blk"),
       col("c_mktsegment").as("seg"),
@@ -1454,7 +1457,7 @@ object Relational {
   }
 
   /** Core over any (id, blk, seg, balk, sfx) record frame. */
-  def fellegiSunterDf(c: DataFrame): DataFrame = {
+  def fellegiSunterDf(c: DataFrame)(implicit s: Scope): DataFrame = {
     val a = c.select(col("id").as("ida"), col("blk"), col("seg").as("sega"),
       col("balk").as("balka"), col("sfx").as("sfxa"))
     val b = c.select(col("id").as("idb"), col("blk"), col("seg").as("segb"),
@@ -1464,7 +1467,7 @@ object Relational {
         (col("balka") === col("balkb")).cast("long").as("bal_a"),
         (col("sfxa") === col("sfxb")).cast("long").as("sfx_a"))
       .groupBy("seg_a", "bal_a", "sfx_a").agg(count(lit(1)).as("n_pairs"))
-      .localCheckpoint(true) // ≤2³ rows feed BOTH the u-totals and the output
+      .checkpointed // ≤2³ rows feed BOTH the u-totals and the output
     val tot = pat.agg(sum("n_pairs").as("np"),
       sum(col("n_pairs") * col("seg_a")).as("na_seg"),
       sum(col("n_pairs") * col("bal_a")).as("na_bal"),
@@ -1664,7 +1667,7 @@ object Relational {
     * (range-partitioned sort + two-pass offsets — never a
     * single-partition window over the customer grain); response is one
     * keyed semi-rollup; the output is 10 rows. */
-  def decileLift(spark: SparkSession, dir: String): DataFrame = {
+  def decileLift(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val resp = Tables.orders(spark, dir)
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_custkey").as("ck")).distinct().withColumn("y", lit(1L))
@@ -1673,7 +1676,7 @@ object Relational {
         expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("score"))
       .join(resp, Seq("ck"), "left")
       .select(col("ck"), col("score"), coalesce(col("y"), lit(0L)).as("y"))
-      .localCheckpoint(true) // feeds the rank pass and the totals
+      .checkpointed // feeds the rank pass and the totals
     val tot = cust.agg(count(lit(1)).as("n"), sum("y").as("resp"))
     ScaleWindows.withGlobalRowNumber(cust,
         Seq(col("score").desc, col("ck")), "rk")
@@ -1737,11 +1740,11 @@ object Relational {
     * all-pairs) whose fan-out is Σ(items/order choose 2) — bounded by
     * the basket-size constant, linear in orders; item counts join back
     * on the part key; the global top-k plans TakeOrderedAndProject. */
-  def basketPairs(spark: SparkSession, dir: String): DataFrame = {
+  def basketPairs(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val items = Tables.lineitem(spark, dir)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .distinct()
-      .localCheckpoint(true) // feeds pairs, item counts, and the total
+      .checkpointed // feeds pairs, item counts, and the total
     val nOrders = items.agg(countDistinct("ok").as("n")).head().getLong(0)
     val itemCnt = items.groupBy("pk").agg(count(lit(1)).as("c"))
     val a = items.selectExpr("ok", "pk AS pa")
@@ -1815,7 +1818,7 @@ object Relational {
     *
     * Scale: three key rollups (block, truth, truth×block) per scheme,
     * each partial+final; the finish is per-scheme 1-row arithmetic. */
-  def blockingQuality(spark: SparkSession, dir: String): DataFrame = {
+  def blockingQuality(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val c = Tables.customer(spark, dir).select(
       col("c_custkey").as("id"),
       col("c_nationkey").cast("string").as("blk_nation"),
@@ -1824,7 +1827,7 @@ object Relational {
       concat_ws("#", col("c_mktsegment"), expr("substring(c_name, -2, 2)"),
         expr("CAST(CAST(round(c_acctbal * 100) AS BIGINT) DIV 100000 AS STRING)"))
         .as("truth"))
-      .localCheckpoint(true) // one scan feeds all six rollups
+      .checkpointed // one scan feeds all six rollups
     val n = c.count()
     val totalPairs = BigDecimal(n) * (n - 1) / 2
     val truthPairs = c.groupBy("truth").agg(count(lit(1)).as("g"))
@@ -1863,7 +1866,7 @@ object Relational {
     * (fan-out Σ(items/order choose 2), linear in orders); the rank
     * window partitions by anchor part — millions of small groups, never
     * a global sort; the hot-anchor pick is TakeOrderedAndProject. */
-  def alsoBought(spark: SparkSession, dir: String): DataFrame = {
+  def alsoBought(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val items = Tables.lineitem(spark, dir)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .distinct()
@@ -1873,7 +1876,7 @@ object Relational {
       .groupBy("pa", "pb").agg(count(lit(1)).as("c"))
     val sym = pairs.selectExpr("pa AS part", "pb AS partner", "c")
       .unionAll(pairs.selectExpr("pb AS part", "pa AS partner", "c"))
-      .localCheckpoint() // feeds both the rank window and the anchor pick
+      .checkpointed // feeds both the rank window and the anchor pick
     val hot = sym.groupBy("part").agg(sum("c").as("tot"))
       .orderBy(col("tot").desc, col("part").asc).limit(AlsoBoughtParts)
     val w = Window.partitionBy("part").orderBy(col("c").desc, col("partner").asc)
@@ -1899,17 +1902,17 @@ object Relational {
     * 3-way work; the support count joins baskets through the L2-pruned
     * pair first (never the raw items³ fan-out), then the candidate
     * closure prunes again before the final rollup. */
-  def basketTriples(spark: SparkSession, dir: String): DataFrame = {
+  def basketTriples(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val items = Tables.lineitem(spark, dir)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .distinct()
-      .localCheckpoint() // feeds pairs and the pruned triple count
+      .checkpointed // feeds pairs and the pruned triple count
     val pairs = items.selectExpr("ok", "pk AS pa")
       .join(items.selectExpr("ok AS okb", "pk AS pb"),
         col("ok") === col("okb") && col("pa") < col("pb"))
       .groupBy("pa", "pb").agg(count(lit(1)).as("c"))
     val l2 = pairs.filter(col("c") >= TripleMinSup).select("pa", "pb")
-      .localCheckpoint() // the frequent-pair lattice level
+      .checkpointed // the frequent-pair lattice level
     val cands = l2.selectExpr("pa AS p1", "pb AS p2")
       .join(l2.selectExpr("pa AS p1", "pb AS p3"), "p1")
       .filter(col("p2") < col("p3"))
@@ -1978,14 +1981,14 @@ object Relational {
     *
     * Scale: one (part, year) rollup, a base-year self-join on the part
     * key, and a year-grain census — no sorts, no windows. */
-  def priceIndex(spark: SparkSession, dir: String): DataFrame = {
+  def priceIndex(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val py = Tables.lineitem(spark, dir)
       .groupBy(col("l_partkey").as("pk"), year(col("l_shipdate")).as("yr"))
       .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).as("cents"),
         sum(expr("CAST(round(l_quantity * 100) AS BIGINT)")).as("qty"))
       .filter(col("qty") > 0L)
       .selectExpr("pk", "yr", "(cents * 1000000) DIV qty AS up_micro", "qty")
-      .localCheckpoint() // feeds both sides of the base join
+      .checkpointed // feeds both sides of the base join
     val baseYr = py.agg(min("yr")).head().getInt(0)
     val base = py.filter(col("yr") === baseYr)
       .selectExpr("pk", "up_micro AS up0", "qty AS q0")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GateUtil._
 import graft.Tables
 import graft.functions.TextFns.hash56Sql
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -161,10 +162,10 @@ object Similarity {
     * `nlist` ≤ 0 → the [[autoNlist]] √N default (the gate pins
     * [[IvfLists]] so the oracle's unrolled quantizer stays fixed). */
   def ivfTopK(spark: SparkSession, dir: String,
-      nlist: Int = -1, nProbe: Int = IvfProbe, k: Int = 3): DataFrame = {
+      nlist: Int = -1, nProbe: Int = IvfProbe, k: Int = 3): DataFrame = pinned { implicit s =>
     import graft.ml.KMeansGraft
     val e = embWithNorm(spark, dir)
-      .withColumn("sv", slice(col("v"), 1, QuantDim)).cache()
+      .withColumn("sv", slice(col("v"), 1, QuantDim)).persisted
     val nl = if (nlist > 0) nlist else autoNlist(e.count())
     val model = KMeansGraft.fit(e.select(col("vec_id"), col("sv")), "sv", "vec_id",
       nl, maxIter = IvfIters)
@@ -179,17 +180,11 @@ object Similarity {
       .withColumn("cosine", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
     val w = Window.partitionBy("qid")
       .orderBy(col("cosine").desc, col("vec_id").asc)
-    val out = scored.withColumn("rank", row_number().over(w))
+    scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("qid"), col("rank"), col("vec_id").as("neighbor_id"),
         round(col("cosine"), 6).as("cosine"))
       .orderBy("qid", "rank")
-      .collect() // small; materialize so the corpus cache can be freed
-    e.unpersist(false)
-    val spark2 = spark
-    import spark2.implicits._
-    out.map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-      .toSeq.toDF("qid", "rank", "neighbor_id", "cosine")
   }
 
   /** Pinned-quantizer cell assignment frame (vec_id, cell) — the
@@ -200,17 +195,13 @@ object Similarity {
     * row's assignment is a pure function of (vector, centers) via the
     * same codegen'd argmin expression as [[ivfTopK]]'s cells stage, so
     * batch ≡ stream on this stage by construction. */
-  def ivfCellRows(spark: SparkSession, dir: String): DataFrame = {
+  def ivfCellRows(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     import graft.ml.KMeansGraft
     val e = embWithNorm(spark, dir)
-      .withColumn("sv", slice(col("v"), 1, QuantDim)).cache()
+      .withColumn("sv", slice(col("v"), 1, QuantDim)).persisted
     val model = KMeansGraft.fit(e.select(col("vec_id"), col("sv")), "sv",
       "vec_id", IvfLists, maxIter = IvfIters)
-    val out = e
-      .select(col("vec_id"), model.assignCol(col("sv")).cast("long").as("cell"))
-      .localCheckpoint()
-    e.unpersist(false)
-    out
+    e.select(col("vec_id"), model.assignCol(col("sv")).cast("long").as("cell"))
   }
 
   /** Sparse-vector similarity parameters: queries are doc_id < SparseQ,
@@ -349,14 +340,14 @@ object Similarity {
     * expression (k·dim codegen'd flops per row) reduced by a 1-row
     * TakeOrdered — centers live on the driver (k·dim doubles, the
     * KM-fold bounded class); nothing pairwise ever materializes. */
-  def kcenterCoreset(spark: SparkSession, dir: String): DataFrame = {
+  def kcenterCoreset(spark: SparkSession, dir: String): DataFrame = scoped { implicit s =>
     val spark2 = spark
     import spark2.implicits._
     val pts = Tables.embeddings(spark, dir)
       .select(col("vec_id"),
         transform(slice(col("embedding"), 1, KCenterDim),
           x => x.cast("double")).as("v"))
-      .cache()
+      .persisted
     def dist(c: Array[Double]): Column =
       (0 until KCenterDim).map { i =>
         val d = element_at(col("v"), i + 1) - lit(c(i))
@@ -373,7 +364,6 @@ object Similarity {
       centers = centers :+ ((far.getLong(0),
         far.getSeq[Double](1).toArray, far.getDouble(2)))
     }
-    pts.unpersist(false)
     centers.zipWithIndex.map { case ((id, _, r), i) =>
       (i + 1, id, BigDecimal(r).setScale(6, BigDecimal.RoundingMode.HALF_UP)
         .toDouble)
@@ -426,15 +416,15 @@ object Similarity {
     * pairwise sim table is ≤N² rows and the greedy fold is a bounded
     * driver loop (the KM-fold bounded-collect class, N²·K work). */
   def mmrRerank(spark: SparkSession, dir: String): DataFrame =
-    mmrRerankDf(Tables.documents(spark, dir))
+    pinned { implicit s => mmrRerankDf(Tables.documents(spark, dir)) }
 
   /** Core over any (doc_id, text) frame. */
-  private[graft] def mmrRerankDf(docs: DataFrame): DataFrame = {
+  private[graft] def mmrRerankDf(docs: DataFrame)(implicit s: Scope): DataFrame = {
     import graft.functions.TextFns.tokens
     val spark2 = docs.sparkSession
     import spark2.implicits._
     val cands = bm25MicroRows(docs, Bm25Terms.toDF("w"), MmrN)
-      .localCheckpoint(true) // feeds scores AND the token self-join
+      .checkpointed // feeds scores AND the token self-join
     // bounded collects: ≤ MmrN score rows, ≤ MmrN² sim rows (N = 20
     // constant — the candidate pool never grows with the corpus)
     val maxRow = cands.agg(max("score_micro")).head()
@@ -449,7 +439,7 @@ object Similarity {
     val tw = docs.join(cands.select("doc_id"), "doc_id")
       .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
       .filter(length(col("w")) > 0).distinct()
-      .localCheckpoint(true)
+      .checkpointed
     val sizes = tw.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val sims = tw.as("a").join(tw.as("b"),
         col("a.w") === col("b.w") && col("a.doc_id") =!= col("b.doc_id"))
@@ -631,11 +621,11 @@ object Similarity {
 
   /** Core over any (vec_id, v: array<double>) frame; `dim` must equal
     * PqM · PqSubDim = 64 (the geometry the oracle unrolls). */
-  def pqTopKDf(fullIn: DataFrame, dim: Int): DataFrame = {
+  def pqTopKDf(fullIn: DataFrame, dim: Int): DataFrame = pinned { implicit s =>
     import graft.ml.KMeansGraft
     require(dim == PqM * PqSubDim, s"dim $dim != ${PqM * PqSubDim}")
     val spark = fullIn.sparkSession
-    val full = fullIn.cache()
+    val full = fullIn.persisted
     val subCol = (j: Int) => slice(col("v"), j * PqSubDim + 1, PqSubDim)
     val models = (0 until PqM).map { j =>
       KMeansGraft.fit(full.select(col("vec_id"), subCol(j).as("sv")),
@@ -683,17 +673,12 @@ object Similarity {
       .withColumn("l2", graft.functions.VectorFns.sqDist(col("qv"), col("v")))
     val w = Window.partitionBy("qid")
       .orderBy(col("l2").asc, col("vec_id").asc)
-    val out = rr.withColumn("rank", row_number().over(w))
+    rr.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= PqTopK)
       .select(col("qid"), col("rank"), col("vec_id").as("neighbor_id"),
         round(col("adc"), 6).as("adc_dist"),
         round(col("l2"), 6).as("l2_dist"))
       .orderBy("qid", "rank")
-      .collect() // small; materialize so the corpus cache can be freed
-    full.unpersist(false)
-    out.map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3),
-        r.getDouble(4)))
-      .toSeq.toDF("qid", "rank", "neighbor_id", "adc_dist", "l2_dist")
   }
 
   val RrfC = 60       // the standard RRF damping constant
@@ -781,12 +766,12 @@ object Similarity {
     * INTEGER sum — immune to float-add ordering, so partial aggregation
     * stays safe at any parallelism. */
   private[graft] def bm25MicroRows(docs: DataFrame, termsDf: DataFrame,
-      k: Int): DataFrame = {
+      k: Int)(implicit s: Scope): DataFrame = {
     import graft.functions.TextFns.tokens
     val toks = docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
       .filter(length(col("w")) > 0)
-      .localCheckpoint() // shared by dl, tf, and df
+      .checkpointed // shared by dl, tf, and df
     val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
     val tf = toks.join(broadcast(termsDf), "w")
@@ -820,13 +805,13 @@ object Similarity {
     * Scale: two inverted-index passes plus ONE bounded collect (the
     * 3-term expansion — a queryset, not data); feedback tf rollup is
     * keyed on the 5-doc shortlist via a broadcast semi-join. */
-  def prfSearch(spark: SparkSession, dir: String): DataFrame = {
+  def prfSearch(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     import spark.implicits._
     import graft.functions.TextFns.tokens
     val docs = Tables.documents(spark, dir)
     val baseTerms = Bm25Terms.toDF("w")
     val base = bm25MicroRows(docs, baseTerms, PrfTopK)
-      .localCheckpoint() // reused: output stage 1 + feedback shortlist
+      .checkpointed // reused: output stage 1 + feedback shortlist
     val fb = base.orderBy("rank").limit(PrfFeedbackDocs).select("doc_id")
     val expansion = docs.join(broadcast(fb), "doc_id")
       .select(explode(tokens(col("text"))).as("w"))

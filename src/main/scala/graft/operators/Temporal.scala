@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GateUtil._
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -206,7 +207,7 @@ object Temporal {
     *
     * Scale: one daily rollup and one unbounded-preceding window over
     * the bounded day grain; 1-row output. */
-  def maxDrawdown(spark: SparkSession, dir: String): DataFrame = {
+  def maxDrawdown(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val daily = Tables.orders(spark, dir)
       .groupBy(to_date(col("o_orderdate")).as("d"))
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
@@ -216,7 +217,7 @@ object Temporal {
       .withColumn("peak", max("cents").over(w))
       .selectExpr("d", "cents", "peak",
         "((peak - cents) * 10000) DIV peak AS dd_bp")
-      .localCheckpoint(true) // day-grain; feeds the argmax and the census
+      .checkpointed // day-grain; feeds the argmax and the census
     val top = dd.orderBy(desc("dd_bp"), asc("d")).limit(1)
       .selectExpr("dd_bp AS max_dd_bp", "d AS trough_date",
         "peak AS peak_cents", "cents AS trough_cents")
@@ -232,7 +233,7 @@ object Temporal {
     *
     * Scale: two pair-keyed partial+final rollups over the bounded day
     * grain — no window at all beyond the initial ranking. */
-  def haarDownsample(spark: SparkSession, dir: String): DataFrame = {
+  def haarDownsample(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val daily = Tables.orders(spark, dir)
       .groupBy(to_date(col("o_orderdate")).as("d"))
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
@@ -247,7 +248,7 @@ object Temporal {
           sum(when(expr("rn % 2 = 1"), col("v"))).as("b"))
         .filter(col("c") === 2)
         .selectExpr("p AS rn", "(a + b) DIV 2 AS v", "(a - b) DIV 2 AS det")
-        .localCheckpoint(true) // feeds output AND the next level
+        .checkpointed // feeds output AND the next level
     val l1 = level(l0)
     val l2 = level(l1.select("rn", "v"))
     l1.selectExpr("1 AS level", "rn AS idx", "v AS approx_cents",
@@ -266,14 +267,14 @@ object Temporal {
     * truncation PINNED. Degenerate zero variance pins NULL.
     *
     * Scale: one daily rollup, a 7-row weekday aggregate, 1-row output. */
-  def anovaDow(spark: SparkSession, dir: String): DataFrame = {
+  def anovaDow(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val daily = Tables.orders(spark, dir)
       .groupBy(to_date(col("o_orderdate")).as("d"))
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
       .selectExpr("d", s"cents DIV $AnomalyKUsdDiv AS x",
         "weekday(CAST(d AS DATE)) AS dow")
     val g = daily.groupBy("dow").agg(count(lit(1)).as("nd"), sum("x").as("sd"))
-      .localCheckpoint(true)
+      .checkpointed
     val tot = daily.agg(count(lit(1)).as("n"), sum("x").as("sx"),
       sum(expr("CAST(x AS DECIMAL(38,0)) * x")).as("sxx"))
     g.agg(count(lit(1)).as("k"),
@@ -363,14 +364,15 @@ object Temporal {
     *
     * Scale: the ACF's days-sized self-join plus one ≤h-row reduction —
     * one fact scan total. */
-  def ljungBox(spark: SparkSession, dir: String): DataFrame =
+  def ljungBox(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     ljungBoxOf(Tables.orders(spark, dir)
       .groupBy(to_date(col("o_orderdate")).as("d"))
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cents")))
+  }
 
   /** Core over any (d DATE, cents LONG) daily frame. */
-  private[graft] def ljungBoxOf(daily0: DataFrame): DataFrame = {
-    val daily = daily0.localCheckpoint(true) // feeds the ACF join AND n
+  private[graft] def ljungBoxOf(daily0: DataFrame)(implicit s: Scope): DataFrame = {
+    val daily = daily0.checkpointed // feeds the ACF join AND n
     val nF = daily.agg(count(lit(1)).as("n"))
     acfOf(daily)
       .select(col("lag_d"),
@@ -781,19 +783,20 @@ object Temporal {
     * calendar DATE-offset self-join fanned ×7 (the q_acf posture — a
     * days-sized join, no window over a coarse priority partition); the
     * census is |priorities|·7 rows. */
-  def seasonalDecompose(spark: SparkSession, dir: String): DataFrame =
+  def seasonalDecompose(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     seasonalDecomposeOf(Tables.orders(spark, dir)
       .groupBy(col("o_orderpriority").as("pri"), to_date(col("o_orderdate")).as("d"))
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cents")))
+  }
 
   /** Core over any (pri, d DATE, cents LONG) daily frame. Note the
     * full-window filter makes the gate vacuous on series sparser than
     * 7 consecutive days (sf0.001's per-priority series) — both engines
     * agree on the empty result; sf0.01+ exercises the arithmetic. */
-  private[graft] def seasonalDecomposeOf(daily0: DataFrame): DataFrame = {
+  private[graft] def seasonalDecomposeOf(daily0: DataFrame)(implicit s: Scope): DataFrame = {
     val spark2 = daily0.sparkSession
     import spark2.implicits._
-    val daily = daily0.localCheckpoint(true)
+    val daily = daily0.checkpointed
     val offs = broadcast((-3 to 3).toDF("k"))
     val trend = daily.as("a").crossJoin(offs)
       .join(daily.as("b"),
@@ -809,7 +812,7 @@ object Temporal {
       .groupBy("pri", "dow")
       .agg(count(lit(1)).as("n_days"), sum("dev7").as("sdev"),
         sum(expr("CAST(dev7 AS DECIMAL(38,0)) * dev7")).as("sdev2"))
-      .localCheckpoint(true) // feeds rows AND the per-pri variance share
+      .checkpointed // feeds rows AND the per-pri variance share
     val share = byDow.groupBy("pri").agg(
         // floor(sdev²/n_days) entirely in DECIMAL via (s² − s² % n)/n —
         // Spark's DIV would funnel each term through LONG, which
@@ -845,11 +848,11 @@ object Temporal {
     *
     * Scale: one daily rollup, one days-sized offset join, two bounded
     * broadcasts, a |priorities|-row census. */
-  def xmrChart(spark: SparkSession, dir: String): DataFrame = {
+  def xmrChart(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val daily = Tables.orders(spark, dir)
       .groupBy(col("o_orderpriority").as("pri"), to_date(col("o_orderdate")).as("d"))
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
-      .localCheckpoint(true)
+      .checkpointed
     val stats = daily.groupBy("pri")
       .agg(count(lit(1)).as("n"), sum("cents").as("sy"))
     val mr = daily.as("a")
@@ -887,14 +890,15 @@ object Temporal {
     *
     * Scale: one daily partial+final rollup, then two days-sized
     * self-joins and a |priorities|-row census. */
-  def forecastAccuracy(spark: SparkSession, dir: String): DataFrame =
+  def forecastAccuracy(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     forecastAccuracyOf(Tables.orders(spark, dir)
       .groupBy(col("o_orderpriority").as("pri"), to_date(col("o_orderdate")).as("d"))
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cents")))
+  }
 
   /** Core over any (pri, d DATE, cents LONG) daily frame. */
-  private[graft] def forecastAccuracyOf(daily0: DataFrame): DataFrame = {
-    val daily = daily0.localCheckpoint(true) // feeds both offset joins
+  private[graft] def forecastAccuracyOf(daily0: DataFrame)(implicit s: Scope): DataFrame = {
+    val daily = daily0.checkpointed // feeds both offset joins
     def offsetErr(lag: Int, aeName: String, nName: String) = daily.as("a")
       .join(daily.as("b"),
         col("b.pri") === col("a.pri") &&
@@ -928,12 +932,12 @@ object Temporal {
     * months without a prior-year twin emit NULL growth (visible, not
     * dropped). One rollup to the month grain + a month-key self-join —
     * the fan-out is the bounded month table, never fact-sized. */
-  def yoyGrowth(spark: SparkSession, dir: String): DataFrame = {
+  def yoyGrowth(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val monthly = Tables.orders(spark, dir)
       .groupBy(expr("date_trunc('month', CAST(o_orderdate AS DATE))")
         .cast("date").as("m"))
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
-      .localCheckpoint(true)
+      .checkpointed
     monthly.as("a")
       .join(monthly.as("b"), col("b.m") === add_months(col("a.m"), -12), "left")
       .selectExpr("a.m AS month", "a.cents AS rev_cents",
@@ -956,7 +960,7 @@ object Temporal {
     * (the 5-row bounded group space) — never a row_number window
     * funneling the order grain through 5 sort partitions; the heavy
     * reduction still happens before the sort. */
-  def fulfillmentSla(spark: SparkSession, dir: String): DataFrame = {
+  def fulfillmentSla(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val perOrder = Tables.lineitem(spark, dir)
       .groupBy(col("l_orderkey").as("ok")).agg(max("l_shipdate").as("last_ship"))
       .join(Tables.orders(spark, dir).select(col("o_orderkey"),
@@ -965,10 +969,10 @@ object Temporal {
       .select(col("pri"), col("ok"),
         datediff(to_date(col("last_ship")), to_date(col("o_orderdate")))
           .cast("long").as("days"))
-      .localCheckpoint(true) // feeds the rank pass AND the census
+      .checkpointed // feeds the rank pass AND the census
     val ranked = ScaleWindows.withBoundedGroupRank(perOrder, "pri",
         Seq(col("days"), col("ok")), "rn", "n")
-      .localCheckpoint(true) // feeds both rank picks
+      .checkpointed // feeds both rank picks
     val census = ranked.groupBy("pri")
       .agg(count(lit(1)).as("n_orders"), min("days").as("min_days"),
         max("days").as("max_days"))
@@ -1334,7 +1338,7 @@ object Temporal {
     * ~10⁹-cents days over a 7-year horizon — inside DECIMAL(38,0); at
     * ~10¹²-cents days apply the q_mann_whitney two-step split before
     * trusting the quotient. */
-  def varianceRatio(spark: SparkSession, dir: String): DataFrame = {
+  def varianceRatio(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val spark2 = spark
     import spark2.implicits._
     val roll = Tables.orders(spark, dir)
@@ -1342,7 +1346,7 @@ object Temporal {
       .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("y"))
     val daily = roll.crossJoin(broadcast(roll.agg(min("d").as("d0"))))
       .selectExpr("CAST(datediff(d, d0) AS BIGINT) AS x", "y")
-      .localCheckpoint() // feeds the base variance and every lag
+      .checkpointed // feeds the base variance and every lag
     val base = daily.agg(count(lit(1)).as("n1"),
       sum(expr("CAST(y AS DECIMAL(38,0))")).as("s1"),
       sum(expr("CAST(y AS DECIMAL(38,0)) * y")).as("s21"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GateUtil._
 import graft.Tables
 import graft.functions.TextFns._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -260,39 +261,37 @@ object TextAnalysis {
     * k broadcast draws probe each row map-side (a bounded-broadcast
     * nested loop, the kneighbors argument: the build side is k rows at
     * any corpus size). */
-  def weightedSampleDf(docs: DataFrame, k: Int): DataFrame = {
+  def weightedSampleDf(docs: DataFrame, k: Int): DataFrame = pinned { s =>
     val spark = docs.sparkSession
     val spark2 = spark
     import spark2.implicits._
-    val sorted = docs
+    val sorted = s.own(docs
       .select(col("doc_id"), col("source"),
         greatest(size(words), lit(1)).cast("long").as("nt"))
       .repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id")
-      .as[(Long, String, Long)].rdd.cache()
+      .as[(Long, String, Long)].rdd.cache())
     val withStart = withStartOffsets(sorted, (r: (Long, String, Long)) => r._3) {
       case ((_, src, nt), start) => (src, nt, start)
     }.toDF("source", "nt", "start")
     // nt >= 1 per row, so a NULL/0 total means an empty corpus: zero
     // draws, empty result (pmod by 0 is undefined — never build it)
     val totalRow = withStart.agg(sum("nt")).head()
-    if (totalRow.isNullAt(0)) {
-      sorted.unpersist(false)
-      return docs.select(col("source"), lit(0L).as("n_draws")).limit(0)
+    if (totalRow.isNullAt(0)) docs.select(col("source"), lit(0L).as("n_draws")).limit(0)
+    else {
+      val total = totalRow.getLong(0)
+      val draws = spark.range(k).select(col("id").as("j"),
+        pmod(graft.functions.TextFns.hash56(
+          concat(lit("draw"), col("id").cast("string"))), lit(total)).as("tgt"))
+      val hits = withStart.join(broadcast(draws),
+          col("tgt") >= col("start") && col("tgt") < col("start") + col("nt"))
+        .groupBy("source").agg(count(lit(1)).as("n_draws"))
+      // zero-draw sources come from the cached offsets frame — no second
+      // scan of the base table
+      withStart.select("source").distinct()
+        .join(hits, Seq("source"), "left")
+        .select(col("source"), coalesce(col("n_draws"), lit(0L)).as("n_draws"))
+        .orderBy("source")
     }
-    val total = totalRow.getLong(0)
-    val draws = spark.range(k).select(col("id").as("j"),
-      pmod(graft.functions.TextFns.hash56(
-        concat(lit("draw"), col("id").cast("string"))), lit(total)).as("tgt"))
-    val hits = withStart.join(broadcast(draws),
-        col("tgt") >= col("start") && col("tgt") < col("start") + col("nt"))
-      .groupBy("source").agg(count(lit(1)).as("n_draws"))
-    // zero-draw sources come from the cached offsets frame — no second
-    // scan of the base table
-    val out = withStart.select("source").distinct()
-      .join(hits, Seq("source"), "left")
-      .select(col("source"), coalesce(col("n_draws"), lit(0L)).as("n_draws"))
-      .orderBy("source")
-    graft.GateUtil.pinned(out)(sorted.unpersist(false))
   }
 
   def weightedSample(spark: SparkSession, dir: String): DataFrame =
@@ -372,45 +371,34 @@ object TextAnalysis {
     }
   }
 
-  /** The per-document packed frame (nt, pack_start, pack_end) — exposed
-    * so plan assertions can check the pre-aggregate stage has no
-    * single-partition funnel. Caller must unpersist the returned RDD
-    * handle after consuming the frame. */
-  private[graft] def packedFrame(docs: DataFrame, budget: Long)
-    : (DataFrame, org.apache.spark.rdd.RDD[(Long, Long)]) = {
-    val spark = docs.sparkSession
-    val spark2 = spark
+  /** The per-document packed frame (nt, pack_start, pack_end) over a
+    * sorted RDD cached in the caller's scope — exposed so plan
+    * assertions can check the pre-aggregate stage has no
+    * single-partition funnel. */
+  private[graft] def packedFrame(docs: DataFrame, budget: Long)(implicit s: Scope): DataFrame = {
+    val spark2 = docs.sparkSession
     import spark2.implicits._
-    val sorted = docs
+    val sorted = s.own(docs
       .select(col("doc_id"), greatest(size(words), lit(1)).cast("long").as("nt"))
       .repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id")
-      .as[(Long, Long)].rdd.cache()
+      .as[(Long, Long)].rdd.cache())
     val b = budget
-    val packed = withStartOffsets(sorted, (r: (Long, Long)) => r._2) {
+    withStartOffsets(sorted, (r: (Long, Long)) => r._2) {
       case ((_, nt), start) => (nt, start / b, (start + nt - 1) / b)
     }.toDF("nt", "pack_start", "pack_end")
-    (packed, sorted)
   }
 
   /** Core over any (doc_id, text) frame with a parametric budget (the
     * gate fixes 2048; tests use tiny budgets to exercise straddling). */
-  def sequencePackDf(docs: DataFrame, budget: Long): DataFrame = {
-    val spark = docs.sparkSession
-    val spark2 = spark
-    import spark2.implicits._
-    val (packed, sorted) = packedFrame(docs, budget)
-    val out = packed.agg(
+  def sequencePackDf(docs: DataFrame, budget: Long): DataFrame = pinned { implicit s =>
+    packedFrame(docs, budget).agg(
       count(lit(1)).as("n_docs"),
       sum("nt").as("total_tokens"),
       (max("pack_end") + 1).as("n_packs"),
       sum(when(col("pack_start") =!= col("pack_end"), 1L).otherwise(0L))
         .as("n_straddlers"),
       round(count(lit(1)).cast("double") / (max("pack_end") + 1), 4)
-        .as("avg_docs_per_pack")).collect()
-    sorted.unpersist(false)
-    Seq((out(0).getLong(0), out(0).getLong(1), out(0).getLong(2),
-      out(0).getLong(3), out(0).getDouble(4)))
-      .toDF("n_docs", "total_tokens", "n_packs", "n_straddlers", "avg_docs_per_pack")
+        .as("avg_docs_per_pack"))
   }
 
   /** Gopher-style intra-document repetition signals (the published
@@ -496,41 +484,31 @@ object TextAnalysis {
 
   /** The quality-ordered pre-aggregate stage: the range-partitioned,
     * within-partition-sorted (source, nt) frame — exposed so plan
-    * assertions can check the ordering never funnels to one partition.
-    * Caller must unpersist the returned RDD handle. */
-  private[graft] def budgetSortedFrame(docs: DataFrame)
-    : (DataFrame, org.apache.spark.rdd.RDD[(String, Long)]) = {
-    val spark = docs.sparkSession
-    val spark2 = spark
-    import spark2.implicits._
+    * assertions can check the ordering never funnels to one partition. */
+  private[graft] def budgetSortedFrame(docs: DataFrame): DataFrame = {
     val t = docs
       .select(col("source"), col("doc_id"), words.as("w"))
       .select(col("source"), col("doc_id"),
         greatest(size(col("w")), lit(1)).cast("long").as("nt"),
         (size(array_distinct(col("w"))).cast("double") / size(col("w"))).as("uniq"))
-    val sortedDf = t
-      .repartitionByRange(col("uniq").desc, col("doc_id"))
+    t.repartitionByRange(col("uniq").desc, col("doc_id"))
       .sortWithinPartitions(col("uniq").desc, col("doc_id"))
       .select(col("source"), col("nt"))
-    (sortedDf, sortedDf.as[(String, Long)].rdd.cache())
   }
 
-  private[graft] def tokenBudgetSelectDf(docs: DataFrame, budget: Long): DataFrame = {
-    val spark = docs.sparkSession
-    val spark2 = spark
-    import spark2.implicits._
-    val (_, sorted) = budgetSortedFrame(docs)
-    val b = budget
-    val kept = withStartOffsets(sorted, (r: (String, Long)) => r._2) {
-      case ((src, nt), start) => (src, nt, start)
-    }.filter(_._3 < b).map(t => (t._1, t._2)).toDF("source", "nt")
-    val out = kept.groupBy("source")
-      .agg(count(lit(1)).as("n_kept"), sum("nt").as("tok_kept"))
-      .orderBy("source").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    sorted.unpersist(false)
-    out.toDF("source", "n_kept", "tok_kept")
-  }
+  private[graft] def tokenBudgetSelectDf(docs: DataFrame, budget: Long): DataFrame =
+    pinned { s =>
+      val spark2 = docs.sparkSession
+      import spark2.implicits._
+      val sorted = s.own(budgetSortedFrame(docs).as[(String, Long)].rdd.cache())
+      val b = budget
+      withStartOffsets(sorted, (r: (String, Long)) => r._2) {
+        case ((src, nt), start) => (src, nt, start)
+      }.filter(_._3 < b).map(t => (t._1, t._2)).toDF("source", "nt")
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_kept"), sum("nt").as("tok_kept"))
+        .orderBy("source")
+    }
 
   val SegSize = 10
   val SegDupMinDocs = 2
@@ -983,17 +961,16 @@ object TextAnalysis {
   def bpeTrainDf(spark: SparkSession, wordCounts: DataFrame): DataFrame = {
     val spark2 = spark
     import spark2.implicits._
-    val (merges, _, wc) = bpeFit(wordCounts)
-    wc.unpersist(false) // merges are already collected
-    merges.toDF("step", "left_sym", "right_sym", "pair_count")
+    // merges are collected before the scope frees the fit's blocks
+    graft.GateUtil.scoped { implicit s => bpeFit(wordCounts)._1 }
+      .toDF("step", "left_sym", "right_sym", "pair_count")
       .orderBy("step")
   }
 
   /** Fit loop shared by the train and encode gates: returns the learned
-    * merges, the final (seq, cnt) vocabulary frame (materialized via
-    * localCheckpoint so it survives the cache release), and the CACHED
-    * word-count frame — callers must unpersist it. */
-  private def bpeFit(wordCounts: DataFrame)
+    * merges, the final (seq, cnt) vocabulary frame (checkpointed) and the
+    * cached word-count frame, both held by the caller's scope. */
+  private def bpeFit(wordCounts: DataFrame)(implicit s: Scope)
       : (Seq[(Int, String, String, Long)], DataFrame, DataFrame) = {
     // JOB-COUNT CAP: each merge step costs one 1-row argmax ACTION plus
     // one more nested `replace` in the vocab plan, so steps = Spark jobs
@@ -1011,7 +988,7 @@ object TextAnalysis {
     // is its own action, and without this every step would re-run the
     // corpus tokenize+groupBy (the vocab-bounded posture only holds if
     // later passes start FROM the vocab table)
-    val wc = wordCounts.cache()
+    val wc = wordCounts.persisted
     var vocab = wc
       .select(trim(regexp_replace(col("w"), "(.)", "$1 ")).as("seq"), col("cnt"))
     val merges = Seq.newBuilder[(Int, String, String, Long)]
@@ -1038,7 +1015,7 @@ object TextAnalysis {
           col("cnt"))
       }
     }
-    (merges.result(), vocab.localCheckpoint(true), wc)
+    (merges.result(), vocab.checkpointed, wc)
   }
 
   /** BPE encoding summary — applies the freshly learned merges back to
@@ -1046,7 +1023,7 @@ object TextAnalysis {
     * compression (chars → BPE symbols), i.e. the number a tokenizer
     * throughput pipeline actually budgets by. Same vocab-bounded scale
     * posture as [[bpeTrain]]; the summary is a 1-row aggregate. */
-  def bpeEncode(spark: SparkSession, dir: String): DataFrame = {
+  def bpeEncode(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val wc = Tables.documents(spark, dir)
       .select(explode(words).as("w")).filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
@@ -1057,11 +1034,10 @@ object TextAnalysis {
       count(lit(1)).as("n_distinct_words"))
     val after = vocab.select(
       sum(col("cnt") * size(split(col("seq"), " "))).as("symbols_after"))
-    graft.GateUtil.pinned(before.crossJoin(after)
+    before.crossJoin(after)
       .selectExpr("n_distinct_words", "total_words", "symbols_before",
         "symbols_after",
-        "CAST((symbols_after * 10000) DIV symbols_before AS BIGINT) AS compression_bp"))(
-      wcc.unpersist(false))
+        "CAST((symbols_after * 10000) DIV symbols_before AS BIGINT) AS compression_bp")
   }
 
   def vocabGrowth(spark: SparkSession, dir: String): DataFrame = {
@@ -1442,7 +1418,7 @@ object TextAnalysis {
     * join, per-bucket gradient via a doc-keyed residual join) and moves
     * ≤65 doubles to the driver — the classic broadcast-weights /
     * aggregated-gradients posture, corpus-linear per step. */
-  def qualityClassifier(spark: SparkSession, dir: String): DataFrame = {
+  def qualityClassifier(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val spark2 = spark
     import spark2.implicits._
     val toks = Tables.documents(spark, dir)
@@ -1472,9 +1448,9 @@ object TextAnalysis {
       // the corpus-sized COO frame TWICE per step. One exchange at
       // build time serves all QcIters steps.
       .repartition(col("doc_id"))
-      .cache()
+      .persisted
     val nd = feats.select(countDistinct("doc_id")).head().getLong(0).toDouble
-    val docList = feats.select("doc_id", "y").distinct().cache()
+    val docList = feats.select("doc_id", "y").distinct().persisted
     // per-bucket standardization over the implicit-zero dense matrix:
     // absent cells contribute 0 to both power sums
     val st = feats.groupBy("bucket")
@@ -1519,11 +1495,7 @@ object TextAnalysis {
       }
       bias = round6(bias - QcLr * s / nd)
     }
-    graft.GateUtil.pinned(
-      (w.toSeq :+ (-1 -> bias)).toDF("bucket", "weight")
-        .orderBy("bucket")) {
-      docList.unpersist(false); feats.unpersist(false); ()
-    }
+    (w.toSeq :+ (-1 -> bias)).toDF("bucket", "weight").orderBy("bucket")
   }
 
   /** Flesch–Kincaid grade-level readability per source — the classic
@@ -1576,10 +1548,10 @@ object TextAnalysis {
     * vocab-sized count table, not the corpus; PR iterations shuffle
     * ranks-only per pass. */
   def textrank(spark: SparkSession, dir: String): DataFrame =
-    textrankDf(Tables.documents(spark, dir).select(col("text")))
+    pinned { implicit s => textrankDf(Tables.documents(spark, dir).select(col("text"))) }
 
   /** Core over any (text) frame. */
-  private[graft] def textrankDf(docsIn: DataFrame): DataFrame = {
+  private[graft] def textrankDf(docsIn: DataFrame)(implicit s: Scope): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = docsIn.select(words.as("w"))
     val toks = docs.select(explode(col("w")).as("tw"))
@@ -1589,7 +1561,7 @@ object TextAnalysis {
         .over(Window.orderBy(desc("c"), asc("tw"))).cast("long"))
       .filter(col("vid") <= TrVocab)
       .select("tw", "vid")
-      .localCheckpoint(true) // vocab-sized; feeds two joins + the readback
+      .checkpointed // vocab-sized; feeds two joins + the readback
     // r15 optimization (guide §1.2 per-task work): pair up consecutive
     // words as STRUCTS — the previous "w1 w2" concat + two split()s per
     // pair row allocated three strings per co-occurrence just to tear

@@ -336,7 +336,7 @@ object Sources {
     * that needs a scratch warehouse. */
   private def withScratchDir(prefix: String)(f: String => DataFrame): DataFrame = {
     val base = java.nio.file.Files.createTempDirectory(prefix).toString
-    try graft.GateUtil.pinned(f(base))(())
+    try graft.GateUtil.pinned(_ => f(base))
     finally {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(java.nio.file.Paths.get(base)).iterator().asScala
@@ -415,7 +415,7 @@ object Sources {
       val shuffles = joined.queryExecution.executedPlan.toString()
         .linesIterator.count(_.contains("Exchange hashpartitioning(l_orderkey"))
       require(shuffles == 0, "bucketed join must not exchange on the join key")
-      graft.GateUtil.pinned(joined)(())
+      graft.GateUtil.pinned(_ => joined)
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $tl")
       spark.sql(s"DROP TABLE IF EXISTS $to")

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.GateUtil._
 import graft.functions.TextFns.hash56Sql
 import graft.operators.Sketches
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -83,11 +84,11 @@ object StreamingGates {
     staged(key)(stageTimeSlicesNow(df, orderKey, n))
 
   private def stageTimeSlicesNow(df: DataFrame,
-      orderKey: org.apache.spark.sql.Column, n: Int): java.nio.file.Path = {
+      orderKey: org.apache.spark.sql.Column, n: Int): java.nio.file.Path = scoped { implicit s =>
     import scala.jdk.CollectionConverters._
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream_gate_")
     val keyed = df.withColumn("__k", orderKey.cast("long"))
-      .localCheckpoint() // one compute; the n slice filters all read it
+      .checkpointed // one compute; the n slice filters all read it
     val bounds = keyed.stat
       .approxQuantile("__k", (1 until n).map(_.toDouble / n).toArray, 0.001)
       .map(_.toLong).distinct.sorted
@@ -129,7 +130,7 @@ object StreamingGates {
   /** Streaming HLL parity: q_hll_distinct's input → 6-batch file stream
     * → incremental registers → final per-scope state must equal the
     * batch estimate columns (oracle = trimmed q_hll_distinct SQL). */
-  def hllStreamParity(spark: SparkSession, dir: String): DataFrame = {
+  def hllStreamParity(spark: SparkSession, dir: String): DataFrame = pinned { _ =>
     import spark.implicits._
     val stream = fileStream(Sketches.hllInput(spark, dir),
       "scope STRING, v STRING", nFiles = 6, s"hll:$dir")
@@ -143,13 +144,12 @@ object StreamingGates {
       .select(col("scope"), col("n_seen"), col("f.buckets_used"),
         col("f.est_distinct"))
       .orderBy("scope")
-      .localCheckpoint() // pin the result frame independent of the sink
   }
 
   /** Streaming Count-Min parity: the corpus token stream keyed to one
     * scope, probed at the corpus's most frequent token; the final grid
     * estimate must equal the from-scratch oracle sketch. */
-  def cmsStreamParity(spark: SparkSession, dir: String): DataFrame = {
+  def cmsStreamParity(spark: SparkSession, dir: String): DataFrame = pinned { _ =>
     import spark.implicits._
     val tw = Sketches.tokenStream(spark, dir).select(col("w"))
     // probe word memoized like the staging: a pure function of dir
@@ -170,14 +170,13 @@ object StreamingGates {
       .select(col("scope"), lit(probe).as("probe_w"), col("n_seen"),
         col("est_c"))
       .orderBy("scope")
-      .localCheckpoint()
   }
 
   /** Streaming exact-dedup parity: the q_dedup_exact input re-played as
     * a 6-batch file stream through the keyed distinct-hash registry —
     * the final per-source state must equal the batch distinct counts
     * (oracle = the q_dedup_exact SQL verbatim). */
-  def dedupStreamParity(spark: SparkSession, dir: String): DataFrame = {
+  def dedupStreamParity(spark: SparkSession, dir: String): DataFrame = pinned { _ =>
     import spark.implicits._
     val input = graft.Tables.documents(spark, dir)
       .select(col("source").as("scope"), lower(trim(col("text"))).as("v"))
@@ -192,7 +191,6 @@ object StreamingGates {
       .select(col("scope").as("source"), col("n_seen").as("n_docs"),
         col("n_unique"), (col("n_seen") - col("n_unique")).as("n_dupes"))
       .orderBy("source")
-      .localCheckpoint()
   }
 
   /** Streaming sessionization parity: the q_events_session input
@@ -204,7 +202,7 @@ object StreamingGates {
     * formulations differ only at a gap of EXACTLY the 30-min boundary
     * (batch `>` merges, session_window splits) — measure-zero at µs
     * precision and absent from every SF of the testdata. */
-  def sessionStreamParity(spark: SparkSession, dir: String): DataFrame = {
+  def sessionStreamParity(spark: SparkSession, dir: String): DataFrame = pinned { _ =>
     val input = graft.Tables.events(spark, dir).select("user_id", "ts")
     val stream = fileStream(input, "user_id BIGINT, ts TIMESTAMP",
       nFiles = 6, s"session:$dir")
@@ -218,7 +216,6 @@ object StreamingGates {
         max("n").as("max_session_events"),
         round(avg("n"), 4).as("avg_session_events"))
       .orderBy("user_id")
-      .localCheckpoint()
   }
 
   /** Streaming funnel parity: the q_events_funnel input re-played as a
@@ -229,7 +226,7 @@ object StreamingGates {
     * a batch the handler sorts). The keyed three-slot state machine
     * crosses batch boundaries; the final per-user stage table must
     * replay to the batch funnel oracle verbatim. */
-  def funnelStreamParity(spark: SparkSession, dir: String): DataFrame = {
+  def funnelStreamParity(spark: SparkSession, dir: String): DataFrame = pinned { _ =>
     import spark.implicits._
     val ev = graft.Tables.events(spark, dir)
       .select("event_id", "user_id", "event_type", "ts")
@@ -254,14 +251,13 @@ object StreamingGates {
           .as("avg_sec_convert"))
       .select(lit(nUsers).as("n_users"), col("n_view"),
         col("n_view_click"), col("n_full_funnel"), col("avg_sec_convert"))
-      .localCheckpoint()
   }
 
   /** Streaming EWMA parity: the q_ewma_smooth daily rollup re-played as
     * a time-ordered file stream ([[stageTimeSlices]] on the day key)
     * through the constant-state keyed EWMA; every emitted row must
     * hash-match the batch window formulation's oracle verbatim. */
-  def ewmaStreamParity(spark: SparkSession, dir: String): DataFrame = {
+  def ewmaStreamParity(spark: SparkSession, dir: String): DataFrame = pinned { _ =>
     import spark.implicits._
     val daily = graft.Tables.orders(spark, dir)
       .groupBy(col("o_orderpriority").as("pri"),
@@ -275,7 +271,6 @@ object StreamingGates {
       EventsStreaming.ewmaStream(stream.as[EventsStreaming.PriDay]).toDF(),
       "ewma_parity_sink", OutputMode.Append())
       .orderBy("pri", "d")
-      .localCheckpoint()
   }
 
   /** Streaming Croston parity — the FORECASTER member of the parity
@@ -285,7 +280,7 @@ object StreamingGates {
     * through the keyed (last-day, z, p, n) automaton; each part's
     * latest emitted row (max n) must hash-match the batch gate's final
     * fold verbatim — oracle = the q_croston recursive-CTE SQL. */
-  def crostonStreamParity(spark: SparkSession, dir: String): DataFrame = {
+  def crostonStreamParity(spark: SparkSession, dir: String): DataFrame = pinned { _ =>
     import spark.implicits._
     val daily = graft.Tables.lineitem(spark, dir)
       .groupBy(col("l_partkey").as("pk"), to_date(col("l_shipdate")).as("d"))
@@ -305,7 +300,6 @@ object StreamingGates {
       .select(col("partkey"), col("n_demand_days"), col("f.z_micro"),
         col("f.p_micro"), col("f.rate_micro"))
       .orderBy("partkey")
-      .localCheckpoint()
   }
 
   /** Streaming CUSUM parity: the q_cusum_shift daily census (baseline
@@ -314,7 +308,7 @@ object StreamingGates {
     * recurrence; every emitted row
     * must hash-match the batch prefix-sum-identity oracle verbatim —
     * the recurrence≡identity theorem as a driver artifact. */
-  def cusumStreamParity(spark: SparkSession, dir: String): DataFrame = {
+  def cusumStreamParity(spark: SparkSession, dir: String): DataFrame = pinned { _ =>
     import spark.implicits._
     val daily = graft.Tables.events(spark, dir)
       .groupBy(col("event_type").as("et"), to_date(col("ts")).as("d"))
@@ -331,7 +325,6 @@ object StreamingGates {
       EventsStreaming.cusumStream(stream.as[EventsStreaming.CusumIn]).toDF(),
       "cusum_parity_sink", OutputMode.Append())
       .orderBy("et", "d")
-      .localCheckpoint()
   }
 
   /** Streaming quantile-sketch parity: q_quantile_sketch's cents input
@@ -339,7 +332,7 @@ object StreamingGates {
     * census — additive counts, so the converged census (and the 4
     * quantile reads off it) must equal the batch gate's; oracle = the
     * batch SQL with n aliased to n_seen. */
-  def qsketchStreamParity(spark: SparkSession, dir: String): DataFrame = {
+  def qsketchStreamParity(spark: SparkSession, dir: String): DataFrame = pinned { _ =>
     import spark.implicits._
     import EventsStreaming.{CentsValue, quantileSketchStream}
     val input = graft.Tables.orders(spark, dir)
@@ -357,7 +350,6 @@ object StreamingGates {
       .select(col("q_bp"), col("n_seen"), col("f.est_lo_cents"),
         col("f.est_hi_cents"))
       .orderBy("q_bp")
-      .localCheckpoint()
   }
 
   /** Streaming windowed-counts parity: the q_events_window input
@@ -366,7 +358,7 @@ object StreamingGates {
     * the final table must equal the batch rollup (oracle = the
     * q_events_window SQL verbatim). The one watermark-free gate: the
     * comparison IS the converged complete table. */
-  def windowStreamParity(spark: SparkSession, dir: String): DataFrame = {
+  def windowStreamParity(spark: SparkSession, dir: String): DataFrame = pinned { _ =>
     val input = graft.Tables.events(spark, dir)
       .select(col("ts"), col("event_type"), col("value"))
     val tmp = stageTimeSlices(input, unix_micros(col("ts")), 6, s"window:$dir")
@@ -381,7 +373,6 @@ object StreamingGates {
         col("event_type"), col("n_events"),
         round(col("sv"), 4).as("sum_value"))
       .orderBy("wstart", "event_type")
-      .localCheckpoint()
   }
 
   /** Streaming as-of attribution parity — the HARD-semantics parity
@@ -393,7 +384,7 @@ object StreamingGates {
     * no-data micro-batch then fires the timeouts). The drained output
     * must equal the batch as-of twin verbatim: every purchase paired
     * with the latest click strictly before it in (ts, event_id) order. */
-  def asofStreamParity(spark: SparkSession, dir: String): DataFrame = {
+  def asofStreamParity(spark: SparkSession, dir: String): DataFrame = pinned { _ =>
     import spark.implicits._
     import EventsStreaming.{RawEvent, clickAttributionUnordered}
     val base = graft.Tables.events(spark, dir)
@@ -435,7 +426,6 @@ object StreamingGates {
         col("purchase_ts").cast("timestamp_ntz").as("purchase_ts"),
         col("last_click_ts").cast("timestamp_ntz").as("last_click_ts"))
       .orderBy("event_id")
-      .localCheckpoint()
   }
 
   /** Streaming incremental MinHash-LSH dedup parity — the 12th
@@ -452,7 +442,7 @@ object StreamingGates {
     * arrival iff ANY of its bands hit. Oracle: the batch gate's bands
     * CTE chain + an earlier-doc band-collision semi-join, rolled up per
     * source — stream == batch == oracle. */
-  def lshStreamParity(spark: SparkSession, dir: String): DataFrame = {
+  def lshStreamParity(spark: SparkSession, dir: String): DataFrame = pinned { _ =>
     import spark.implicits._
     import EventsStreaming.BandRow
     val tmp = staged(s"lshdedup:$dir") {
@@ -472,7 +462,6 @@ object StreamingGates {
         sum(when(col("dup"), 1L).otherwise(0L)).as("n_dup"),
         sum(when(col("dup"), 0L).otherwise(1L)).as("n_new"))
       .orderBy("source")
-      .localCheckpoint()
   }
 
   /** Streaming incremental IVF-indexing parity — the 13th stream↔batch
@@ -492,7 +481,7 @@ object StreamingGates {
     * delivery. Oracle: the batch gate's quantizer-replay CTE chain
     * (lloydCtesSql/assignCteSql — identical to q_ann_ivf's) rolled up
     * per cell — stream == batch == oracle. */
-  def ivfStreamParity(spark: SparkSession, dir: String): DataFrame = {
+  def ivfStreamParity(spark: SparkSession, dir: String): DataFrame = pinned { _ =>
     import spark.implicits._
     import EventsStreaming.CellRow
     val tmp = staged(s"ivfcells:$dir") {
@@ -510,7 +499,6 @@ object StreamingGates {
         min(when(col("is_first"), col("vec_id"))).as("first_vec"),
         max("occ").as("max_occ"))
       .orderBy("cell")
-      .localCheckpoint()
   }
 
   /** Streaming PSI drift-monitor parity — the 14th stream↔batch parity
@@ -526,7 +514,7 @@ object StreamingGates {
     * and computes the identical Laplace-smoothed PSI contributions with
     * the batch gate's 1-row totals broadcast. Oracle: q_psi_drift's
     * verbatim — stream == batch == oracle. */
-  def psiStreamParity(spark: SparkSession, dir: String): DataFrame = {
+  def psiStreamParity(spark: SparkSession, dir: String): DataFrame = pinned { _ =>
     import spark.implicits._
     import EventsStreaming.BucketPhase
     import graft.operators.DataQuality.PsiBucketCents
@@ -560,7 +548,6 @@ object StreamingGates {
           |  ln(((c1 + 1.0) / (n1 + nb)) / ((c2 + 1.0) / (n2 + nb))), 6)
           |  AS psi_contrib""".stripMargin)
       .orderBy("bucket")
-      .localCheckpoint()
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -49,13 +49,14 @@ object GraphProbe {
     val sb = new StringBuilder
     // warmup JIT/page cache on the small scale once
     pairs(sf01).write.format("noop").mode("overwrite").save()
-    Seq("sf0.1" -> sf01, "sf1" -> sf1).foreach { case (tag, dir) =>
+    Seq("sf0.1" -> sf01, "sf1" -> sf1).foreach { case (tag, dir) => graft.GateUtil.scoped { probe =>
       val tPairs = t(pairs(dir).write.format("noop").mode("overwrite").save())
-      val p = pairs(dir).localCheckpoint(true) // fixed input for the loop timings
+      val p = probe.checkpoint(pairs(dir)) // fixed input for the loop timings
       val nPairs = p.count()
-      def run(iters: Int): Unit =
+      def run(iters: Int): Unit = graft.GateUtil.scoped { implicit s =>
         graft.operators.Graph.pageRankPairs(p, topK = 20, iters = iters)
           .write.format("noop").mode("overwrite").save()
+      }
       run(3) // per-scale warmup: JIT + page cache, discarded
       val t1 = Seq(t(run(1)), t(run(1))).min
       val t3 = Seq(t(run(3)), t(run(3))).min
@@ -69,8 +70,7 @@ object GraphProbe {
         s""""t_setup":${math.round(tSetup * 100) / 100.0}}"""
       println(s"[graphprobe] $line")
       sb.append(line).append("\n")
-      p.unpersist(false)
-    }
+    }}
     java.nio.file.Files.writeString(java.nio.file.Paths.get(
       sys.props.getOrElse("user.dir", "."), "GRAPH_PASS_COST.json"), sb.toString)
     spark.stop()

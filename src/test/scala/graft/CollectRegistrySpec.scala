@@ -26,8 +26,9 @@ class CollectRegistrySpec extends AnyFunSuite {
     "GateUtil.scala" -> (1,
       "pinned(): re-wraps a GATE REPORT frame (bounded by construction — " +
         "every gate emits a census/top-k/grain-bounded result) as a local " +
-        "relation so its upstream caches can be freed before the next query"),
-    "LinalgQueries.scala" -> (14,
+        "relation so its scope's checkpoints and caches can be freed before " +
+        "the next query"),
+    "LinalgQueries.scala" -> (12,
       "p×p Gramians (cols², never rows), block-column treeAggregate " +
         "reductions (one ncols-length vector), fancy-index/kron/pad gates " +
         "over fixed gate-shaped matrices — all O(cols²) or constant shapes"),
@@ -38,16 +39,16 @@ class CollectRegistrySpec extends AnyFunSuite {
         "vec_id-ordered gate frames, and block-column reductions " +
         "(one ncols vector); save_npy's per-partition offsets are " +
         "one Long per partition"),
-    "TextAnalysis.scala" -> (7,
+    "TextAnalysis.scala" -> (5,
       "Misra-Gries per-partition candidate summaries (≤k counters per " +
         "partition), withStartOffsets per-partition sums (one Long per " +
-        "partition), 1-row packing stats, per-source token-budget rollups " +
-        "(source grain), BPE best-pair limit(1), quality-classifier " +
-        "per-bucket moments (hash-bucket grain, fixed bucket count)"),
-    "Similarity.scala" -> (5,
+        "partition), BPE best-pair limit(1), quality-classifier " +
+        "per-bucket moments and gradients (hash-bucket grain, fixed " +
+        "bucket count)"),
+    "Similarity.scala" -> (3,
       "MMR candidate pool scores and pairwise sims (constant-20 pool → " +
-        "≤20² entries, the r11-audited bounded driver stage), phrase " +
-        "terms (3), and top-k result pins that free the corpus cache"),
+        "≤20² entries, the r11-audited bounded driver stage) and phrase " +
+        "terms (3)"),
     "Events.scala" -> (5,
       "A/B arm aggregates (2 arms), funnel step×variant grain, and " +
         "day-grain KM/retention horizons (calendar-bounded)"),

@@ -67,11 +67,11 @@ class PlanHygieneSpec extends SparkSpec {
       "per-part day-grain demand series — calendar-bounded horizon",
     "q_dedup_rewrite" ->
       "per-document segment list — the rebuild IS the document, bounded by one doc's length",
-    // NOT listed (sweep-invisible, bounded elsewhere): the walk gates'
-    // CSR adjacency collect_list sits behind a localCheckpoint so only
-    // the checkpoint scan reaches this sweep — its Graph.RwSegLen
-    // (65536 neighbors ≈ 512KB/row) segment-split bound is asserted
-    // directly by GraphOpsSpec's "hub escape" test instead.
+    // the walk gates' CSR adjacency rows: a hub's sorted neighbor list
+    // segment-splits at Graph.RwSegLen (65536 neighbors ≈ 512KB/row);
+    // GraphOpsSpec's "hub escape" test asserts the split
+    "q_random_walks" -> "CSR adjacency row ≤ Graph.RwSegLen neighbors (segment split)",
+    "q_walk_skipgrams" -> "CSR adjacency row ≤ Graph.RwSegLen neighbors (segment split)",
   )
 
   private def constantChild(child: String): Boolean =
@@ -87,7 +87,7 @@ class PlanHygieneSpec extends SparkSpec {
   private lazy val plans: Seq[(String, Either[String, String])] = {
     val dir = "/root/testdata/sf0.001"
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> (try Right(fn(spark, dir).queryExecution.executedPlan.toString)
+      name -> (try Right(graft.GateUtil.planOf(fn(spark, dir)).toString)
         catch { case e: Throwable => Left(s"failed to plan: ${e.getMessage}") })
     }
   }

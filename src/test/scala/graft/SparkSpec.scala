@@ -9,6 +9,18 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sc: org.apache.spark.SparkContext = spark.sparkContext
+
+  /** Each test body runs in one GateUtil scope: library cores a test
+    * calls record their checkpoints and caches there, and the scope
+    * frees them when the test ends. */
+  private var testScope: Option[GateUtil.Scope] = None
+  implicit def gateScope: GateUtil.Scope =
+    testScope.getOrElse(sys.error("gateScope is only open inside a test body"))
+
+  override def withFixture(test: NoArgTest) = GateUtil.scoped { s =>
+    testScope = Some(s)
+    try super.withFixture(test) finally testScope = None
+  }
 }
 
 object SparkSpec {

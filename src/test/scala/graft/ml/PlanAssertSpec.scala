@@ -130,14 +130,13 @@ class PlanAssertSpec extends SparkSpec {
         .toDF("doc_id", "text")
       // the real operator's per-document stage: global offsets must come
       // from the broadcast two-pass pattern, never a one-partition window
-      val (packed, sorted) = graft.operators.TextAnalysis.packedFrame(docs, budget = 16L)
+      val packed = graft.operators.TextAnalysis.packedFrame(docs, budget = 16L)
       val plan = packed.queryExecution.executedPlan.toString
       assert(!plan.contains("SinglePartition"),
         s"no single-partition funnel allowed:\n$plan")
       assert(!plan.contains("Window"),
         s"no window over a global ordering allowed:\n$plan")
       assert(packed.count() == 500L)
-      sorted.unpersist(false)
     }
   }
 
@@ -241,7 +240,7 @@ class PlanAssertSpec extends SparkSpec {
       val docs = Seq.tabulate(400)(i =>
         (i.toLong, s"src${i % 3}", (Seq.fill(i % 5 + 1)("w") ++ Seq(s"u$i")).mkString(" ")))
         .toDF("doc_id", "source", "text").repartition(5)
-      val (sortedDf, handle) = graft.operators.TextAnalysis.budgetSortedFrame(docs)
+      val sortedDf = graft.operators.TextAnalysis.budgetSortedFrame(docs)
       val plan = sortedDf.queryExecution.executedPlan.toString
       assert(plan.contains("Exchange rangepartitioning"),
         s"quality ordering must ride a range partitioning:\n$plan")
@@ -249,7 +248,6 @@ class PlanAssertSpec extends SparkSpec {
         s"no single-partition funnel allowed:\n$plan")
       assert(!plan.contains("Window"),
         s"the prefix sum must not be a window over a global ordering:\n$plan")
-      handle.unpersist(false)
     }
   }
 
@@ -460,7 +458,7 @@ class PlanAssertSpec extends SparkSpec {
       // sequential patterns: the pair generator is a KEYED equi-join on
       // (user, session) — the |types|² fan-out must never plan all-pairs
       val sp = graft.operators.Events.seqPatterns(spark2, dir)
-      noAllPairs(sp.queryExecution.executedPlan.toString, "seqPatterns")
+      noAllPairs(graft.GateUtil.planOf(sp).toString, "seqPatterns") // a pinned report
 
       // closeness: per-hop frontier joins are keyed equi-joins against
       // the once-partitioned edges; the k-seed panel never cross-joins

@@ -91,4 +91,23 @@ class ComponentsSpec extends SparkSpec {
       20L -> 20L, 30L -> 20L, 25L -> 20L, 40L -> 40L),
       s"got $got (self-loop-only node 40 is its own singleton component)")
   }
+
+  test("deep permuted chains through the auto regime equal union-find") {
+    val spark2 = spark
+    import spark2.implicits._
+    // 4 chains of 250 nodes with seeded-permuted ids: the Pregel budget
+    // trips and dfjump reruns CC. Each round's checkpoint leaf used to
+    // inherit the product of its join inputs' size estimates, which
+    // compounded until planning a round took tens of seconds; the
+    // Scope's measured leaf size keeps every round cheap.
+    val perm = new scala.util.Random(1L).shuffle((0L until 1000L).toVector)
+    val e = (0 until 4).flatMap { c =>
+      (0 until 249).map(i => (perm(c * 250 + i), perm(c * 250 + i + 1)))
+    }.toDF("src", "dst")
+    val uf = labels(Components.connected(e))
+    val got = Components.connected(e, maxDriverEdges = 0L)
+    assert(labels(got) == uf, "auto regime must equal union-find")
+    assert(uf.values.toSet.size == 4)
+    got.unpersist(false)
+  }
 }
