@@ -422,10 +422,9 @@ object KMeansGraft {
     * partial-aggregated to k rows. */
   def silhouette(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     import org.apache.spark.sql.Column
-    val pts = Tables.embeddings(spark, dir)
+    val pts = s.persist(Tables.embeddings(spark, dir)
       .select(col("vec_id"),
-        transform(slice(col("embedding"), 1, QDim), x => x.cast("double")).as("v"))
-      .persisted
+        transform(slice(col("embedding"), 1, QDim), x => x.cast("double")).as("v")))
     val model = fit(pts, "v", "vec_id", K, Iters)
     def dist(c: Array[Double]): Column =
       (0 until QDim).map { i =>
@@ -433,15 +432,15 @@ object KMeansGraft {
         d * d
       }.reduceLeft(_ + _)
     val sorted = array_sort(array(model.centers.map(dist): _*))
-    val per = pts.select(
+    // k rows; the cached points are dead after it
+    val per = s.checkpoint(pts.select(
         model.assignCol(col("v")).as("cluster"),
         element_at(sorted, 1).as("d1"), element_at(sorted, 2).as("d2"))
       .selectExpr("cluster",
         """CAST(CASE WHEN d2 = 0.0 THEN 0
           |  ELSE round((d2 - d1) * 1000000 / d2) END AS BIGINT) AS s_micro""".stripMargin)
       .groupBy("cluster")
-      .agg(count(lit(1)).as("n_points"), sum("s_micro").as("ssum"))
-      .checkpointed // k rows; the cached points are dead after it
+      .agg(count(lit(1)).as("n_points"), sum("s_micro").as("ssum")))
     s.free(pts)
     val glob = per.agg(
       expr("CAST(sum(ssum) DIV sum(n_points) AS BIGINT)").as("overall_micro"))

@@ -195,8 +195,8 @@ object Components {
         val sent = es
           .join(delta.select(col("id").as("src"), col("lbl").as("slbl")), "src")
           .join(p.select(col("id").as("dst"), col("lbl").as("dlbl")), "dst")
-        val cand = sent.select(col("dst").as("id"), col("slbl"))
-          .union(sent.select(col("dlbl").as("id"), col("slbl")))
+        // each proposal reaches the receiver and hooks its label node
+        val cand = sent.select(explode(array(col("dst"), col("dlbl"))).as("id"), col("slbl"))
           .groupBy("id").agg(min("slbl").as("nmin"))
         val prop = p.join(cand, Seq("id"), "left")
           .select(col("id"), col("lbl").as("plbl"),
@@ -220,7 +220,7 @@ object Components {
         // `next` is materialized — the previous label table is dead
         s.free(p)
         delta = next.filter(col("chg") === 1L).select("id", "lbl")
-        p = next.select("id", "lbl")
+        p = next
         rounds += 1
       }
       require(changed == 0, s"connectedDfJump did not converge in $rounds rounds")

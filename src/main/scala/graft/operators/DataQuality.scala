@@ -275,8 +275,7 @@ object DataQuality {
   def chi2SelectDf(st: DataFrame)(implicit s: Scope): DataFrame = {
     // eager checkpoint: marginals + grid all derive from the cell rollup —
     // without it each of the four branches re-scans the fact table
-    val cells = st.groupBy("feature", "x", "y").agg(count(lit(1)).as("c_xy"))
-      .checkpointed
+    val cells = s.checkpoint(st.groupBy("feature", "x", "y").agg(count(lit(1)).as("c_xy")))
     val fx = cells.groupBy("feature", "x").agg(sum("c_xy").as("c_x"))
     val fy = cells.groupBy("feature", "y").agg(sum("c_xy").as("c_y"))
     val fn = cells.groupBy("feature").agg(sum("c_xy").as("n"),
@@ -317,14 +316,14 @@ object DataQuality {
     * plus a features-sized broadcast of (n, nx, ny) — no second scan of
     * anything fact-sized. */
   def cramersV(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
-    val st = Tables.lineitem(spark, dir).selectExpr(
+    val st = s.checkpoint(Tables.lineitem(spark, dir).selectExpr(
       """stack(4,
         |  'returnflag', l_returnflag,
         |  'linestatus', l_linestatus,
         |  'linenumber', CAST(l_linenumber AS STRING),
         |  'disc_pct',   CAST(CAST(round(l_discount * 100) AS INT) AS STRING))
         |  AS (feature, x)""".stripMargin,
-      "CAST(l_quantity > 25 AS INT) AS y").checkpointed
+      "CAST(l_quantity > 25 AS INT) AS y"))
     val chi = chi2SelectDf(st).select("feature", "df", "chi2_micro")
     val fstats = st.groupBy("feature").agg(count(lit(1)).as("n"),
       countDistinct("x").as("nx"), countDistinct("y").as("ny"))

@@ -70,7 +70,7 @@ object Dedup {
     * (mostly rare) shingles, so recall stays ~1. */
   def ngramJaccard(spark: SparkSession, dir: String, dfCap: Int = 0): DataFrame =
     pinned { implicit s =>
-      val sh = shinglesDf(spark, dir).persisted
+      val sh = s.persist(shinglesDf(spark, dir))
       val cap = if (dfCap >= 0) dfCap else autoDfCap(sh.count())
       // shingle strings collapse to 64-bit hashes BEFORE the inverted-index
       // self-join (the r12 q_jaccard_prefix fix, 10× ratio 4.15→1.36): the
@@ -113,8 +113,8 @@ object Dedup {
     * [[ngramJaccard]]; counts only, no Jaccard verify stage. */
   def ngramJaccardCandidateCensus(docs: DataFrame, dfCap: Int): DataFrame =
     pinned { implicit s =>
-      val sh = docs.select(col("doc_id"),
-        wordShingles(tokens(col("text")), 3).as("sh")).persisted
+      val sh = s.persist(docs.select(col("doc_id"),
+        wordShingles(tokens(col("text")), 3).as("sh")))
       val nDocs = sh.count()
       val cap = if (dfCap >= 0) dfCap else autoDfCap(nDocs)
       val exAll = sh.select(col("doc_id"), explode(col("sh")).as("s0"))
@@ -126,12 +126,11 @@ object Dedup {
             .filter(col("df") <= cap).select("s")
           exAll.join(rare, "s")
         }
-      val exC = ex.persisted
+      val exC = s.persist(ex)
       val nKept = exC.count()
-      val joined = exC.as("a").join(exC.as("b"),
+      val joined = s.persist(exC.as("a").join(exC.as("b"),
           col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .persisted
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b")))
       val nJoinRows = joined.count()
       val nCandPairs = joined.distinct().count()
       val spark = docs.sparkSession
@@ -308,7 +307,7 @@ object Dedup {
     // a/b + the two verify joins); a lazy cache lets the first wave of
     // concurrent tasks each re-run the tokenize+shingle scan before any
     // partition is cached — materialize once, then every reader hits it
-    val sh = shIn.persisted
+    val sh = s.persist(shIn)
     sh.count()
     val (_, cand) = prefixStages(sh)
     cand
@@ -329,12 +328,12 @@ object Dedup {
     * prunes, and pairs passing the full Jaccard verify. candidates/doc
     * is the growth constant a 100 TB run budgets against. */
   def prefixJaccardCensus(spark: SparkSession, dir: String): DataFrame = scoped { implicit s =>
-    val sh = shinglesDf(spark, dir).persisted
+    val sh = s.persist(shinglesDf(spark, dir))
     val (pref, cand) = prefixStages(sh)
     val nDocs = sh.count()
     val nShingleRows = sh.agg(sum(size(col("sh")))).head().getLong(0)
     val nPref = pref.count()
-    val candC = cand.persisted
+    val candC = s.persist(cand)
     val nCand = candC.count()
     val nPass = candC
       .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sha")), "doc_a")
@@ -394,8 +393,7 @@ object Dedup {
     // removes the corpus-sized shuffle by shingle that join paid.
     val sh = docs.select(col("doc_id"), col("is_bench"),
       explode(wordShingles(tokens(col("text")), 3)).as("s"))
-    val benchSh = sh.filter(col("is_bench")).select("s").distinct()
-      .checkpointed
+    val benchSh = s.checkpoint(sh.filter(col("is_bench")).select("s").distinct())
     val bits = benchSh.select(positions(col("s")).as(Seq("i", "pos")))
       .select("pos").distinct()
     val corpSh = sh.filter(!col("is_bench")).select("doc_id", "s")
@@ -481,7 +479,7 @@ object Dedup {
   /** MinHash signature matrix (16 perms) → LSH banding (4 bands × 4 rows)
     * → candidate pairs sharing a band → exact-Jaccard filter >= 0.5. */
   def minhashLsh(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
-    val sh = shinglesDf(spark, dir).persisted
+    val sh = s.persist(shinglesDf(spark, dir))
     val (_, cand) = sigAndCands(sh)
     cand
       .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sha")), "doc_a")
@@ -509,7 +507,7 @@ object Dedup {
     * signature compare is 16 integer equality checks per pair; the
     * census is a ≤41-bucket rollup. */
   def minhashCalibration(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
-    val sh = shinglesDf(spark, dir).persisted
+    val sh = s.persist(shinglesDf(spark, dir))
     val (sig, cand) = sigAndCands(sh)
     val matches = (0 until NumPerms)
       .map(i => when(col(s"a.m$i") === col(s"b.m$i"), 1L).otherwise(0L))
@@ -571,9 +569,8 @@ object Dedup {
     * Scale: components on pair-bounded edges, two doc-keyed rollups, a
     * ≤docs-sized cell table, 1-row arithmetic. */
   def bcubed(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
-    val truth = Tables.documents(spark, dir)
-      .select(col("doc_id"), md5(col("text")).as("t"))
-      .checkpointed // feeds pred, sizes, cells, and N
+    val truth = s.checkpoint(Tables.documents(spark, dir)
+      .select(col("doc_id"), md5(col("text")).as("t"))) // feeds pred, sizes, cells, and N
     val pairs = minhashLsh(spark, dir).select(col("doc_a"), col("doc_b"))
     val comp = s.own(Components.connected(pairs))
     bcubedOf(truth.join(comp, truth("doc_id") === comp("id"), "left")
@@ -583,7 +580,7 @@ object Dedup {
 
   /** Core over any (doc_id, p predicted-cluster, t truth-class) frame. */
   private[graft] def bcubedOf(pred0: DataFrame)(implicit s: Scope): DataFrame = {
-    val pred = pred0.checkpointed
+    val pred = s.checkpoint(pred0)
     val psize = pred.groupBy("p").agg(count(lit(1)).as("np"))
     val tsize = pred.groupBy("t").agg(count(lit(1)).as("nt"))
     val nF = pred.agg(count(lit(1)).as("n_docs"))
@@ -629,12 +626,11 @@ object Dedup {
       nlist: Int = -1): DataFrame = pinned { implicit s =>
     import graft.functions.VectorFns
     import graft.ml.KMeansGraft
-    val e = Tables.embeddings(spark, dir)
+    val e = s.persist(Tables.embeddings(spark, dir)
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
       .withColumn("nrm", VectorFns.norm2(col("v")))
-      .withColumn("sv", slice(col("v"), 1, Similarity.QuantDim))
-      .persisted
+      .withColumn("sv", slice(col("v"), 1, Similarity.QuantDim)))
     val nl = if (nlist > 0) nlist else Similarity.autoNlist(e.count())
     val model = KMeansGraft.fit(e.select(col("vec_id"), col("sv")), "sv",
       "vec_id", nl, maxIter = Similarity.IvfIters)
@@ -664,7 +660,7 @@ object Dedup {
     * (gate mode runs uncapped for the exact oracle). */
   def containment(spark: SparkSession, dir: String, dfCap: Int = 0): DataFrame =
     pinned { implicit s =>
-      val sh = shinglesDf(spark, dir).persisted
+      val sh = s.persist(shinglesDf(spark, dir))
       val cap = if (dfCap >= 0) dfCap else autoDfCap(sh.count())
       val exAll = sh.select(col("doc_id"), explode(col("sh")).as("s"))
       val ex =

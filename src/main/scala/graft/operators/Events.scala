@@ -296,7 +296,7 @@ object Events {
     * Peak and first-attainment collapse in ONE max(struct) aggregate. */
   def peakConcurrency(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val byUser = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-    val sess = Tables.events(spark, dir)
+    val sess = s.checkpoint(Tables.events(spark, dir)
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"))
       .withColumn("prev_us", lag("us", 1).over(byUser))
       .withColumn("new_s",
@@ -305,8 +305,7 @@ object Events {
       .withColumn("session_id", sum("new_s").over(
         byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .groupBy("user_id", "session_id")
-      .agg(min("us").as("s0"), max("us").as("s1"))
-      .checkpointed // feeds the sweep AND the census
+      .agg(min("us").as("s0"), max("us").as("s1"))) // feeds the sweep AND the census
     val sweep = ScaleWindows.withGlobalRunningSum(
       sess.selectExpr("s0 AS us", "CAST(1 AS BIGINT) AS delta")
         .unionAll(sess.selectExpr("s1 AS us", "CAST(-1 AS BIGINT) AS delta")),
@@ -626,7 +625,7 @@ object Events {
     * rows at any corpus size. */
   def seqPatterns(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     val byUser = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val sess = Tables.events(spark, dir)
+    val sess = s.checkpoint(Tables.events(spark, dir)
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
       .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(byUser))
       .withColumn("new_s",
@@ -636,8 +635,7 @@ object Events {
         byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .groupBy("user_id", "session_id", "event_type")
       .agg(min(unix_micros(col("ts"))).as("first_us"),
-        max(unix_micros(col("ts"))).as("last_us"))
-      .checkpointed // feeds both pair sides and the session total
+        max(unix_micros(col("ts"))).as("last_us"))) // feeds both pair sides and the session total
     val nSessions = sess.select("user_id", "session_id").distinct().count()
     val a = sess.selectExpr("user_id", "session_id",
       "event_type AS a", "first_us")
@@ -675,7 +673,8 @@ object Events {
     val spark2 = spark
     import spark2.implicits._
     val byUser = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val e = Tables.events(spark, dir)
+    // one sessionizer pass feeds matrix and starts
+    val e = s.checkpoint(Tables.events(spark, dir)
       .filter(col("event_type").isin(RemovalStates: _*))
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
       .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(byUser))
@@ -685,8 +684,7 @@ object Events {
       .withColumn("session_id", sum("new_s").over(
         byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .withColumn("to_type", lead("event_type", 1).over(byUser))
-      .withColumn("to_session", lead("session_id", 1).over(byUser))
-      .checkpointed // one sessionizer pass feeds matrix and starts
+      .withColumn("to_session", lead("session_id", 1).over(byUser)))
     // bounded collects: ≤ |types|² cells and ≤ |types| start rows
     val cells = e.filter(col("to_session") === col("session_id"))
       .groupBy(col("event_type").as("f"), col("to_type").as("t"))

@@ -129,14 +129,13 @@ object Layout {
       .crossJoin(broadcast(offsets))
       .select(col("idb"), col("xb"), col("yb"),
         (col("bcx") + col("dx")).as("ncx"), (col("bcy") + col("dy")).as("ncy"))
-    val pairs = base.join(repl,
+    val pairs = s.checkpoint(base.join(repl,
         col("cx") === col("ncx") && col("cy") === col("ncy") &&
           col("id") < col("idb"))
       .select(col("id").as("a"), col("idb").as("b"),
         ((col("x") - col("xb")) * (col("x") - col("xb")) +
           (col("y") - col("yb")) * (col("y") - col("yb"))).as("dist2"))
-      .filter(col("dist2") <= r * r)
-      .checkpointed // pairs feed both the count and the top-k
+      .filter(col("dist2") <= r * r)) // pairs feed both the count and the top-k
     val tot = pairs.agg(count(lit(1)).as("n_pairs"))
     pairs.crossJoin(broadcast(tot))
       .orderBy(asc("dist2"), asc("a"), asc("b"))
@@ -168,7 +167,7 @@ object Layout {
 
   /** Core over any (id, x, y) integer point frame. */
   def nnDistanceDf(pts0: DataFrame, r: Long)(implicit s: Scope): DataFrame = {
-    val pts = pts0.checkpointed // feeds base, repl, and the census
+    val pts = s.checkpoint(pts0) // feeds base, repl, and the census
     val spark = pts.sparkSession
     val base = pts.select(col("id"), col("x"), col("y"),
       expr(s"x DIV $r").as("cx"), expr(s"y DIV $r").as("cy"))

@@ -70,12 +70,12 @@ object Pii {
     * a |segments|-row broadcast, a 1-row total broadcast, and a
     * classes×segments grid — never anything row-sized. */
   def tCloseness(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
-    val cells = Tables.customer(spark, dir).selectExpr(
+    // feeds the grid, globals, and class sizes
+    val cells = s.checkpoint(Tables.customer(spark, dir).selectExpr(
         "c_nationkey AS qi1",
         "CAST(round(c_acctbal * 100) AS BIGINT) DIV 100000 AS qi2",
         "c_mktsegment AS sens")
-      .groupBy("qi1", "qi2", "sens").agg(count(lit(1)).as("c"))
-      .checkpointed // feeds the grid, globals, and class sizes
+      .groupBy("qi1", "qi2", "sens").agg(count(lit(1)).as("c")))
     val glob = cells.groupBy("sens").agg(sum("c").as("g"))
     val tot = glob.agg(sum("g").as("nn"))
     val classes = cells.groupBy("qi1", "qi2").agg(sum("c").as("n"))

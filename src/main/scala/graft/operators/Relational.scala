@@ -991,15 +991,14 @@ object Relational {
       .groupBy("ck", "h").agg(sum("cents").as("v"))
     // ntile(4) arithmetic from (rank, n): the first n%4 buckets carry
     // n DIV 4 + 1 rows, the rest n DIV 4 — exactly SQL ntile's deal
-    val q = ScaleWindows.withBoundedGroupRank(
-        halves.checkpointed, "h", Seq(col("v"), col("ck")), "rk", "n")
+    val q = s.checkpoint(ScaleWindows.withBoundedGroupRank(
+        s.checkpoint(halves), "h", Seq(col("v"), col("ck")), "rk", "n")
       .selectExpr("ck", "h", "rk", "n DIV 4 AS k4", "n % 4 AS r4")
       .selectExpr("ck", "h",
         """CAST(CASE WHEN rk <= r4 * (k4 + 1)
           |  THEN (rk - 1) DIV (k4 + 1) + 1
           |  ELSE r4 + (rk - r4 * (k4 + 1) - 1) DIV k4 + 1 END AS INT)
-          |  AS q""".stripMargin)
-      .checkpointed // customer-grain; both half filters read it
+          |  AS q""".stripMargin)) // customer-grain; both half filters read it
     val a = q.filter(col("h") === 0).select(col("ck"), col("q").as("q0"))
     val b = q.filter(col("h") === 1).select(col("ck").as("ckb"), col("q").as("q1"))
     a.join(b, col("ck") === col("ckb"), "full_outer")
@@ -1032,7 +1031,7 @@ object Relational {
   /** Core over any (pk, cents) item-revenue frame. */
   private[graft] def abcOf(byPart0: DataFrame)(implicit s: Scope): DataFrame = {
     // part-grain table feeds the prefix pass AND the total — one scan
-    val byPart = byPart0.checkpointed
+    val byPart = s.checkpoint(byPart0)
     val tot = byPart.agg(sum("cents").as("total"))
     ScaleWindows.withGlobalRunningSum(byPart,
         Seq(desc("cents"), asc("pk")), "cents", "cum")
@@ -1136,11 +1135,10 @@ object Relational {
   private[graft] def kruskalWallisDf(xs: DataFrame)(implicit s: Scope): DataFrame = {
     val byVG = xs.groupBy("v", "grp").agg(count(lit(1)).as("c"))
     val byV = xs.groupBy("v").agg(count(lit(1)).as("t"))
-    val ranked = ScaleWindows
+    val ranked = s.checkpoint(ScaleWindows
       .withGlobalRunningSum(byV, Seq(asc("v")), "t", "cum")
       .selectExpr("v", "2 * (cum - t) + t + 1 AS rank2",
-        "CAST(t AS DECIMAL(38,0)) * t * t - t AS tie3")
-      .checkpointed // value-grain table feeds groups AND ties
+        "CAST(t AS DECIMAL(38,0)) * t * t - t AS tie3")) // value-grain table feeds groups AND ties
     val groups = byVG.join(ranked.select("v", "rank2"), "v")
       .groupBy("grp")
       .agg(sum("c").as("n_g"),
@@ -1196,7 +1194,7 @@ object Relational {
   /** Core over any (seg, cents, o_orderkey tie-break) frame. */
   private[graft] def giniDf(x0: DataFrame)(implicit s: Scope): DataFrame = {
     // order-grain input feeds the rank pass AND the group census
-    val x = x0.checkpointed
+    val x = s.checkpoint(x0)
     ScaleWindows.withBoundedGroupRank(x, "seg",
         Seq(col("cents"), col("o_orderkey")), "rk", "__n")
       .groupBy("seg")
@@ -1272,9 +1270,9 @@ object Relational {
       .agg(count(lit(1)).as("n"), sum("pos").as("p"))
     val w = Window.orderBy("s")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val pre = b.select(col("s"), col("n"), col("p"),
-      sum("n").over(w).as("cn"), sum("p").over(w).as("cp"))
-      .checkpointed // bounded bucket table feeds a 3-way self-join
+    // bounded bucket table feeds a 3-way self-join
+    val pre = s.checkpoint(b.select(col("s"), col("n"), col("p"),
+      sum("n").over(w).as("cn"), sum("p").over(w).as("cp")))
     val lo = pre.select(col("s").as("j"), (col("cn") - col("n")).as("cn0"),
       (col("cp") - col("p")).as("cp0"))
     val hi = pre.select(col("s").as("l"), col("cn").as("cn1"), col("cp").as("cp1"))
@@ -1462,12 +1460,12 @@ object Relational {
       col("balk").as("balka"), col("sfx").as("sfxa"))
     val b = c.select(col("id").as("idb"), col("blk"), col("seg").as("segb"),
       col("balk").as("balkb"), col("sfx").as("sfxb"))
-    val pat = a.join(b, Seq("blk")).filter(col("ida") < col("idb"))
+    // ≤2³ rows feed BOTH the u-totals and the output
+    val pat = s.checkpoint(a.join(b, Seq("blk")).filter(col("ida") < col("idb"))
       .select((col("sega") === col("segb")).cast("long").as("seg_a"),
         (col("balka") === col("balkb")).cast("long").as("bal_a"),
         (col("sfxa") === col("sfxb")).cast("long").as("sfx_a"))
-      .groupBy("seg_a", "bal_a", "sfx_a").agg(count(lit(1)).as("n_pairs"))
-      .checkpointed // ≤2³ rows feed BOTH the u-totals and the output
+      .groupBy("seg_a", "bal_a", "sfx_a").agg(count(lit(1)).as("n_pairs")))
     val tot = pat.agg(sum("n_pairs").as("np"),
       sum(col("n_pairs") * col("seg_a")).as("na_seg"),
       sum(col("n_pairs") * col("bal_a")).as("na_bal"),
@@ -1671,12 +1669,12 @@ object Relational {
     val resp = Tables.orders(spark, dir)
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_custkey").as("ck")).distinct().withColumn("y", lit(1L))
-    val cust = Tables.customer(spark, dir)
+    // feeds the rank pass and the totals
+    val cust = s.checkpoint(Tables.customer(spark, dir)
       .select(col("c_custkey").as("ck"),
         expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("score"))
       .join(resp, Seq("ck"), "left")
-      .select(col("ck"), col("score"), coalesce(col("y"), lit(0L)).as("y"))
-      .checkpointed // feeds the rank pass and the totals
+      .select(col("ck"), col("score"), coalesce(col("y"), lit(0L)).as("y")))
     val tot = cust.agg(count(lit(1)).as("n"), sum("y").as("resp"))
     ScaleWindows.withGlobalRowNumber(cust,
         Seq(col("score").desc, col("ck")), "rk")
@@ -1741,10 +1739,9 @@ object Relational {
     * the basket-size constant, linear in orders; item counts join back
     * on the part key; the global top-k plans TakeOrderedAndProject. */
   def basketPairs(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
-    val items = Tables.lineitem(spark, dir)
+    val items = s.checkpoint(Tables.lineitem(spark, dir)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .distinct()
-      .checkpointed // feeds pairs, item counts, and the total
+      .distinct()) // feeds pairs, item counts, and the total
     val nOrders = items.agg(countDistinct("ok").as("n")).head().getLong(0)
     val itemCnt = items.groupBy("pk").agg(count(lit(1)).as("c"))
     val a = items.selectExpr("ok", "pk AS pa")
@@ -1819,15 +1816,14 @@ object Relational {
     * Scale: three key rollups (block, truth, truth×block) per scheme,
     * each partial+final; the finish is per-scheme 1-row arithmetic. */
   def blockingQuality(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
-    val c = Tables.customer(spark, dir).select(
+    val c = s.checkpoint(Tables.customer(spark, dir).select(
       col("c_custkey").as("id"),
       col("c_nationkey").cast("string").as("blk_nation"),
       expr("CAST(CAST(round(c_acctbal * 100) AS BIGINT) DIV 100000 AS STRING)")
         .as("blk_bal"),
       concat_ws("#", col("c_mktsegment"), expr("substring(c_name, -2, 2)"),
         expr("CAST(CAST(round(c_acctbal * 100) AS BIGINT) DIV 100000 AS STRING)"))
-        .as("truth"))
-      .checkpointed // one scan feeds all six rollups
+        .as("truth"))) // one scan feeds all six rollups
     val n = c.count()
     val totalPairs = BigDecimal(n) * (n - 1) / 2
     val truthPairs = c.groupBy("truth").agg(count(lit(1)).as("g"))
@@ -1874,9 +1870,9 @@ object Relational {
     val b = items.selectExpr("ok AS okb", "pk AS pb")
     val pairs = a.join(b, col("ok") === col("okb") && col("pa") < col("pb"))
       .groupBy("pa", "pb").agg(count(lit(1)).as("c"))
-    val sym = pairs.selectExpr("pa AS part", "pb AS partner", "c")
-      .unionAll(pairs.selectExpr("pb AS part", "pa AS partner", "c"))
-      .checkpointed // feeds both the rank window and the anchor pick
+    // feeds both the rank window and the anchor pick
+    val sym = s.checkpoint(pairs.selectExpr("pa AS part", "pb AS partner", "c")
+      .unionAll(pairs.selectExpr("pb AS part", "pa AS partner", "c")))
     val hot = sym.groupBy("part").agg(sum("c").as("tot"))
       .orderBy(col("tot").desc, col("part").asc).limit(AlsoBoughtParts)
     val w = Window.partitionBy("part").orderBy(col("c").desc, col("partner").asc)
@@ -1903,16 +1899,15 @@ object Relational {
     * pair first (never the raw items³ fan-out), then the candidate
     * closure prunes again before the final rollup. */
   def basketTriples(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
-    val items = Tables.lineitem(spark, dir)
+    val items = s.checkpoint(Tables.lineitem(spark, dir)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .distinct()
-      .checkpointed // feeds pairs and the pruned triple count
+      .distinct()) // feeds pairs and the pruned triple count
     val pairs = items.selectExpr("ok", "pk AS pa")
       .join(items.selectExpr("ok AS okb", "pk AS pb"),
         col("ok") === col("okb") && col("pa") < col("pb"))
       .groupBy("pa", "pb").agg(count(lit(1)).as("c"))
-    val l2 = pairs.filter(col("c") >= TripleMinSup).select("pa", "pb")
-      .checkpointed // the frequent-pair lattice level
+    // the frequent-pair lattice level
+    val l2 = s.checkpoint(pairs.filter(col("c") >= TripleMinSup).select("pa", "pb"))
     val cands = l2.selectExpr("pa AS p1", "pb AS p2")
       .join(l2.selectExpr("pa AS p1", "pb AS p3"), "p1")
       .filter(col("p2") < col("p3"))
@@ -1982,13 +1977,13 @@ object Relational {
     * Scale: one (part, year) rollup, a base-year self-join on the part
     * key, and a year-grain census — no sorts, no windows. */
   def priceIndex(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
-    val py = Tables.lineitem(spark, dir)
+    // feeds both sides of the base join
+    val py = s.checkpoint(Tables.lineitem(spark, dir)
       .groupBy(col("l_partkey").as("pk"), year(col("l_shipdate")).as("yr"))
       .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).as("cents"),
         sum(expr("CAST(round(l_quantity * 100) AS BIGINT)")).as("qty"))
       .filter(col("qty") > 0L)
-      .selectExpr("pk", "yr", "(cents * 1000000) DIV qty AS up_micro", "qty")
-      .checkpointed // feeds both sides of the base join
+      .selectExpr("pk", "yr", "(cents * 1000000) DIV qty AS up_micro", "qty"))
     val baseYr = py.agg(min("yr")).head().getInt(0)
     val base = py.filter(col("yr") === baseYr)
       .selectExpr("pk", "up_micro AS up0", "qty AS q0")

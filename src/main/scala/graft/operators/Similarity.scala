@@ -164,8 +164,8 @@ object Similarity {
   def ivfTopK(spark: SparkSession, dir: String,
       nlist: Int = -1, nProbe: Int = IvfProbe, k: Int = 3): DataFrame = pinned { implicit s =>
     import graft.ml.KMeansGraft
-    val e = embWithNorm(spark, dir)
-      .withColumn("sv", slice(col("v"), 1, QuantDim)).persisted
+    val e = s.persist(embWithNorm(spark, dir)
+      .withColumn("sv", slice(col("v"), 1, QuantDim)))
     val nl = if (nlist > 0) nlist else autoNlist(e.count())
     val model = KMeansGraft.fit(e.select(col("vec_id"), col("sv")), "sv", "vec_id",
       nl, maxIter = IvfIters)
@@ -197,8 +197,8 @@ object Similarity {
     * batch ≡ stream on this stage by construction. */
   def ivfCellRows(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
     import graft.ml.KMeansGraft
-    val e = embWithNorm(spark, dir)
-      .withColumn("sv", slice(col("v"), 1, QuantDim)).persisted
+    val e = s.persist(embWithNorm(spark, dir)
+      .withColumn("sv", slice(col("v"), 1, QuantDim)))
     val model = KMeansGraft.fit(e.select(col("vec_id"), col("sv")), "sv",
       "vec_id", IvfLists, maxIter = IvfIters)
     e.select(col("vec_id"), model.assignCol(col("sv")).cast("long").as("cell"))
@@ -343,11 +343,10 @@ object Similarity {
   def kcenterCoreset(spark: SparkSession, dir: String): DataFrame = scoped { implicit s =>
     val spark2 = spark
     import spark2.implicits._
-    val pts = Tables.embeddings(spark, dir)
+    val pts = s.persist(Tables.embeddings(spark, dir)
       .select(col("vec_id"),
         transform(slice(col("embedding"), 1, KCenterDim),
-          x => x.cast("double")).as("v"))
-      .persisted
+          x => x.cast("double")).as("v")))
     def dist(c: Array[Double]): Column =
       (0 until KCenterDim).map { i =>
         val d = element_at(col("v"), i + 1) - lit(c(i))
@@ -423,8 +422,8 @@ object Similarity {
     import graft.functions.TextFns.tokens
     val spark2 = docs.sparkSession
     import spark2.implicits._
-    val cands = bm25MicroRows(docs, Bm25Terms.toDF("w"), MmrN)
-      .checkpointed // feeds scores AND the token self-join
+    // feeds scores AND the token self-join
+    val cands = s.checkpoint(bm25MicroRows(docs, Bm25Terms.toDF("w"), MmrN))
     // bounded collects: ≤ MmrN score rows, ≤ MmrN² sim rows (N = 20
     // constant — the candidate pool never grows with the corpus)
     val maxRow = cands.agg(max("score_micro")).head()
@@ -436,10 +435,9 @@ object Similarity {
     val scores = cands
       .selectExpr("doc_id", s"(score_micro * 10000) DIV $maxS AS sbp")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val tw = docs.join(cands.select("doc_id"), "doc_id")
+    val tw = s.checkpoint(docs.join(cands.select("doc_id"), "doc_id")
       .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
-      .filter(length(col("w")) > 0).distinct()
-      .checkpointed
+      .filter(length(col("w")) > 0).distinct())
     val sizes = tw.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val sims = tw.as("a").join(tw.as("b"),
         col("a.w") === col("b.w") && col("a.doc_id") =!= col("b.doc_id"))
@@ -625,7 +623,7 @@ object Similarity {
     import graft.ml.KMeansGraft
     require(dim == PqM * PqSubDim, s"dim $dim != ${PqM * PqSubDim}")
     val spark = fullIn.sparkSession
-    val full = fullIn.persisted
+    val full = s.persist(fullIn)
     val subCol = (j: Int) => slice(col("v"), j * PqSubDim + 1, PqSubDim)
     val models = (0 until PqM).map { j =>
       KMeansGraft.fit(full.select(col("vec_id"), subCol(j).as("sv")),
@@ -768,10 +766,9 @@ object Similarity {
   private[graft] def bm25MicroRows(docs: DataFrame, termsDf: DataFrame,
       k: Int)(implicit s: Scope): DataFrame = {
     import graft.functions.TextFns.tokens
-    val toks = docs
+    val toks = s.checkpoint(docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
-      .filter(length(col("w")) > 0)
-      .checkpointed // shared by dl, tf, and df
+      .filter(length(col("w")) > 0)) // shared by dl, tf, and df
     val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
     val tf = toks.join(broadcast(termsDf), "w")
@@ -810,8 +807,8 @@ object Similarity {
     import graft.functions.TextFns.tokens
     val docs = Tables.documents(spark, dir)
     val baseTerms = Bm25Terms.toDF("w")
-    val base = bm25MicroRows(docs, baseTerms, PrfTopK)
-      .checkpointed // reused: output stage 1 + feedback shortlist
+    // reused: output stage 1 + feedback shortlist
+    val base = s.checkpoint(bm25MicroRows(docs, baseTerms, PrfTopK))
     val fb = base.orderBy("rank").limit(PrfFeedbackDocs).select("doc_id")
     val expansion = docs.join(broadcast(fb), "doc_id")
       .select(explode(tokens(col("text"))).as("w"))

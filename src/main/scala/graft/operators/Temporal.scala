@@ -213,11 +213,10 @@ object Temporal {
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
     val w = Window.orderBy("d")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val dd = daily
+    val dd = s.checkpoint(daily
       .withColumn("peak", max("cents").over(w))
       .selectExpr("d", "cents", "peak",
-        "((peak - cents) * 10000) DIV peak AS dd_bp")
-      .checkpointed // day-grain; feeds the argmax and the census
+        "((peak - cents) * 10000) DIV peak AS dd_bp")) // day-grain; feeds the argmax and the census
     val top = dd.orderBy(desc("dd_bp"), asc("d")).limit(1)
       .selectExpr("dd_bp AS max_dd_bp", "d AS trough_date",
         "peak AS peak_cents", "cents AS trough_cents")
@@ -240,15 +239,15 @@ object Temporal {
     val l0 = daily
       .withColumn("rn", row_number().over(Window.orderBy("d")) - 1)
       .select(col("rn").cast("long").as("rn"), col("cents").as("v"))
+    // each level feeds the output AND the next level
     def level(df: DataFrame): DataFrame =
-      df.withColumn("p", expr("rn DIV 2"))
+      s.checkpoint(df.withColumn("p", expr("rn DIV 2"))
         .groupBy("p")
         .agg(count(lit(1)).as("c"),
           sum(when(expr("rn % 2 = 0"), col("v"))).as("a"),
           sum(when(expr("rn % 2 = 1"), col("v"))).as("b"))
         .filter(col("c") === 2)
-        .selectExpr("p AS rn", "(a + b) DIV 2 AS v", "(a - b) DIV 2 AS det")
-        .checkpointed // feeds output AND the next level
+        .selectExpr("p AS rn", "(a + b) DIV 2 AS v", "(a - b) DIV 2 AS det"))
     val l1 = level(l0)
     val l2 = level(l1.select("rn", "v"))
     l1.selectExpr("1 AS level", "rn AS idx", "v AS approx_cents",
@@ -273,8 +272,7 @@ object Temporal {
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
       .selectExpr("d", s"cents DIV $AnomalyKUsdDiv AS x",
         "weekday(CAST(d AS DATE)) AS dow")
-    val g = daily.groupBy("dow").agg(count(lit(1)).as("nd"), sum("x").as("sd"))
-      .checkpointed
+    val g = s.checkpoint(daily.groupBy("dow").agg(count(lit(1)).as("nd"), sum("x").as("sd")))
     val tot = daily.agg(count(lit(1)).as("n"), sum("x").as("sx"),
       sum(expr("CAST(x AS DECIMAL(38,0)) * x")).as("sxx"))
     g.agg(count(lit(1)).as("k"),
@@ -372,7 +370,7 @@ object Temporal {
 
   /** Core over any (d DATE, cents LONG) daily frame. */
   private[graft] def ljungBoxOf(daily0: DataFrame)(implicit s: Scope): DataFrame = {
-    val daily = daily0.checkpointed // feeds the ACF join AND n
+    val daily = s.checkpoint(daily0) // feeds the ACF join AND n
     val nF = daily.agg(count(lit(1)).as("n"))
     acfOf(daily)
       .select(col("lag_d"),
@@ -796,7 +794,7 @@ object Temporal {
   private[graft] def seasonalDecomposeOf(daily0: DataFrame)(implicit s: Scope): DataFrame = {
     val spark2 = daily0.sparkSession
     import spark2.implicits._
-    val daily = daily0.checkpointed
+    val daily = s.checkpoint(daily0)
     val offs = broadcast((-3 to 3).toDF("k"))
     val trend = daily.as("a").crossJoin(offs)
       .join(daily.as("b"),
@@ -807,12 +805,12 @@ object Temporal {
       .agg(count(lit(1)).as("nw"), sum(col("b.cents")).as("trendsum"))
       .filter(col("nw") === 7) // full centered window only
       .selectExpr("pri", "d", "7 * cents - trendsum AS dev7")
-    val byDow = trend
+    // feeds rows AND the per-pri variance share
+    val byDow = s.checkpoint(trend
       .selectExpr("pri", "weekday(d) AS dow", "dev7")
       .groupBy("pri", "dow")
       .agg(count(lit(1)).as("n_days"), sum("dev7").as("sdev"),
-        sum(expr("CAST(dev7 AS DECIMAL(38,0)) * dev7")).as("sdev2"))
-      .checkpointed // feeds rows AND the per-pri variance share
+        sum(expr("CAST(dev7 AS DECIMAL(38,0)) * dev7")).as("sdev2")))
     val share = byDow.groupBy("pri").agg(
         // floor(sdev²/n_days) entirely in DECIMAL via (s² − s² % n)/n —
         // Spark's DIV would funnel each term through LONG, which
@@ -849,10 +847,9 @@ object Temporal {
     * Scale: one daily rollup, one days-sized offset join, two bounded
     * broadcasts, a |priorities|-row census. */
   def xmrChart(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
-    val daily = Tables.orders(spark, dir)
+    val daily = s.checkpoint(Tables.orders(spark, dir)
       .groupBy(col("o_orderpriority").as("pri"), to_date(col("o_orderdate")).as("d"))
-      .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
-      .checkpointed
+      .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cents")))
     val stats = daily.groupBy("pri")
       .agg(count(lit(1)).as("n"), sum("cents").as("sy"))
     val mr = daily.as("a")
@@ -898,7 +895,7 @@ object Temporal {
 
   /** Core over any (pri, d DATE, cents LONG) daily frame. */
   private[graft] def forecastAccuracyOf(daily0: DataFrame)(implicit s: Scope): DataFrame = {
-    val daily = daily0.checkpointed // feeds both offset joins
+    val daily = s.checkpoint(daily0) // feeds both offset joins
     def offsetErr(lag: Int, aeName: String, nName: String) = daily.as("a")
       .join(daily.as("b"),
         col("b.pri") === col("a.pri") &&
@@ -933,11 +930,10 @@ object Temporal {
     * dropped). One rollup to the month grain + a month-key self-join —
     * the fan-out is the bounded month table, never fact-sized. */
   def yoyGrowth(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
-    val monthly = Tables.orders(spark, dir)
+    val monthly = s.checkpoint(Tables.orders(spark, dir)
       .groupBy(expr("date_trunc('month', CAST(o_orderdate AS DATE))")
         .cast("date").as("m"))
-      .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
-      .checkpointed
+      .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cents")))
     monthly.as("a")
       .join(monthly.as("b"), col("b.m") === add_months(col("a.m"), -12), "left")
       .selectExpr("a.m AS month", "a.cents AS rev_cents",
@@ -961,18 +957,16 @@ object Temporal {
     * funneling the order grain through 5 sort partitions; the heavy
     * reduction still happens before the sort. */
   def fulfillmentSla(spark: SparkSession, dir: String): DataFrame = pinned { implicit s =>
-    val perOrder = Tables.lineitem(spark, dir)
+    val perOrder = s.checkpoint(Tables.lineitem(spark, dir)
       .groupBy(col("l_orderkey").as("ok")).agg(max("l_shipdate").as("last_ship"))
       .join(Tables.orders(spark, dir).select(col("o_orderkey"),
         col("o_orderdate"), col("o_orderpriority").as("pri")),
         col("ok") === col("o_orderkey"))
       .select(col("pri"), col("ok"),
         datediff(to_date(col("last_ship")), to_date(col("o_orderdate")))
-          .cast("long").as("days"))
-      .checkpointed // feeds the rank pass AND the census
-    val ranked = ScaleWindows.withBoundedGroupRank(perOrder, "pri",
-        Seq(col("days"), col("ok")), "rn", "n")
-      .checkpointed // feeds both rank picks
+          .cast("long").as("days"))) // feeds the rank pass AND the census
+    val ranked = s.checkpoint(ScaleWindows.withBoundedGroupRank(perOrder, "pri",
+        Seq(col("days"), col("ok")), "rn", "n")) // feeds both rank picks
     val census = ranked.groupBy("pri")
       .agg(count(lit(1)).as("n_orders"), min("days").as("min_days"),
         max("days").as("max_days"))
@@ -1344,9 +1338,9 @@ object Temporal {
     val roll = Tables.orders(spark, dir)
       .groupBy(to_date(col("o_orderdate")).as("d"))
       .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("y"))
-    val daily = roll.crossJoin(broadcast(roll.agg(min("d").as("d0"))))
-      .selectExpr("CAST(datediff(d, d0) AS BIGINT) AS x", "y")
-      .checkpointed // feeds the base variance and every lag
+    // feeds the base variance and every lag
+    val daily = s.checkpoint(roll.crossJoin(broadcast(roll.agg(min("d").as("d0"))))
+      .selectExpr("CAST(datediff(d, d0) AS BIGINT) AS x", "y"))
     val base = daily.agg(count(lit(1)).as("n1"),
       sum(expr("CAST(y AS DECIMAL(38,0))")).as("s1"),
       sum(expr("CAST(y AS DECIMAL(38,0)) * y")).as("s21"))

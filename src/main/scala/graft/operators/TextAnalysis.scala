@@ -988,7 +988,7 @@ object TextAnalysis {
     // is its own action, and without this every step would re-run the
     // corpus tokenize+groupBy (the vocab-bounded posture only holds if
     // later passes start FROM the vocab table)
-    val wc = wordCounts.persisted
+    val wc = s.persist(wordCounts)
     var vocab = wc
       .select(trim(regexp_replace(col("w"), "(.)", "$1 ")).as("seq"), col("cnt"))
     val merges = Seq.newBuilder[(Int, String, String, Long)]
@@ -1015,7 +1015,7 @@ object TextAnalysis {
           col("cnt"))
       }
     }
-    (merges.result(), vocab.checkpointed, wc)
+    (merges.result(), s.checkpoint(vocab), wc)
   }
 
   /** BPE encoding summary — applies the freshly learned merges back to
@@ -1430,7 +1430,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("m").cast("double").as("m"),
         when(expr(s"sw * 10000 DIV m >= $QcDensityBp"), 1.0d)
           .otherwise(0.0d).as("y"))
-    val feats = toks
+    val feats = s.persist(toks
       .select(col("doc_id"), hash56(col("word")).as("h"))
       .groupBy(col("doc_id"),
         pmod(col("h"), lit(FeatureHashBuckets.toLong)).cast("int").as("bucket"))
@@ -1447,10 +1447,9 @@ object TextAnalysis {
       // id, bucket) when AQE broadcasts the perDoc join), re-shuffling
       // the corpus-sized COO frame TWICE per step. One exchange at
       // build time serves all QcIters steps.
-      .repartition(col("doc_id"))
-      .persisted
+      .repartition(col("doc_id")))
     val nd = feats.select(countDistinct("doc_id")).head().getLong(0).toDouble
-    val docList = feats.select("doc_id", "y").distinct().persisted
+    val docList = s.persist(feats.select("doc_id", "y").distinct())
     // per-bucket standardization over the implicit-zero dense matrix:
     // absent cells contribute 0 to both power sums
     val st = feats.groupBy("bucket")
@@ -1556,12 +1555,11 @@ object TextAnalysis {
     val docs = docsIn.select(words.as("w"))
     val toks = docs.select(explode(col("w")).as("tw"))
       .filter(length(col("tw")) > 0)
-    val vocab = toks.groupBy("tw").agg(count(lit(1)).as("c"))
+    val vocab = s.checkpoint(toks.groupBy("tw").agg(count(lit(1)).as("c"))
       .withColumn("vid", row_number()
         .over(Window.orderBy(desc("c"), asc("tw"))).cast("long"))
       .filter(col("vid") <= TrVocab)
-      .select("tw", "vid")
-      .checkpointed // vocab-sized; feeds two joins + the readback
+      .select("tw", "vid")) // vocab-sized; feeds two joins + the readback
     // r15 optimization (guide §1.2 per-task work): pair up consecutive
     // words as STRUCTS — the previous "w1 w2" concat + two split()s per
     // pair row allocated three strings per co-occurrence just to tear

@@ -87,8 +87,8 @@ object StreamingGates {
       orderKey: org.apache.spark.sql.Column, n: Int): java.nio.file.Path = scoped { implicit s =>
     import scala.jdk.CollectionConverters._
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream_gate_")
-    val keyed = df.withColumn("__k", orderKey.cast("long"))
-      .checkpointed // one compute; the n slice filters all read it
+    // one compute; the n slice filters all read it
+    val keyed = s.checkpoint(df.withColumn("__k", orderKey.cast("long")))
     val bounds = keyed.stat
       .approxQuantile("__k", (1 until n).map(_.toDouble / n).toArray, 0.001)
       .map(_.toLong).distinct.sorted

@@ -3,7 +3,7 @@ package org.apache.spark.sql
 import org.apache.spark.SparkEnv
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
-import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD, SparkPlan}
+import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
 import org.apache.spark.storage.RDDBlockId
 
 /** Bridge into the package-private pieces graft.GateUtil.Scope needs. */
@@ -33,10 +33,4 @@ object GraftStorageBridge {
   /** Plans registered in the session's cache manager. */
   def cachedPlans(spark: SparkSession): Int =
     spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.numCachedEntries
-
-  /** `df`'s analyzed plan, planned afresh (not executed). */
-  def freshPlan(df: Dataset[_]): SparkPlan = {
-    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
-    classic.Dataset.ofRows(session, df.queryExecution.analyzed).queryExecution.executedPlan
-  }
 }

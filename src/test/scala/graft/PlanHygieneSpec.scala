@@ -87,7 +87,7 @@ class PlanHygieneSpec extends SparkSpec {
   private lazy val plans: Seq[(String, Either[String, String])] = {
     val dir = "/root/testdata/sf0.001"
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> (try Right(graft.GateUtil.planOf(fn(spark, dir)).toString)
+      name -> (try Right(org.apache.spark.sql.GatePlans.of(spark, fn(spark, dir)).toString)
         catch { case e: Throwable => Left(s"failed to plan: ${e.getMessage}") })
     }
   }

@@ -457,8 +457,9 @@ class PlanAssertSpec extends SparkSpec {
     withStructuralPlans {
       // sequential patterns: the pair generator is a KEYED equi-join on
       // (user, session) — the |types|² fan-out must never plan all-pairs
-      val sp = graft.operators.Events.seqPatterns(spark2, dir)
-      noAllPairs(graft.GateUtil.planOf(sp).toString, "seqPatterns") // a pinned report
+      val sp = org.apache.spark.sql.GatePlans.of(spark2,
+        graft.operators.Events.seqPatterns(spark2, dir)) // a pinned report
+      noAllPairs(sp.toString, "seqPatterns")
 
       // closeness: per-hop frontier joins are keyed equi-joins against
       // the once-partitioned edges; the k-seed panel never cross-joins
